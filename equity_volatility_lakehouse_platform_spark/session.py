@@ -19,6 +19,7 @@ from pyspark.sql import SparkSession
 
 DEFAULT_TZ = "UTC"  # oracle comparisons are tz-naive; domain code converts
                     # to America/New_York explicitly via from_utc_timestamp.
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -71,6 +72,11 @@ def get_spark(
         # and the generated code, not of data volume or core count.
         .config("spark.sql.codegen.hugeMethodLimit", "16000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Python workers unpickle kernels that reference this package by
+        # module path, and otherwise see only their cwd (the driver's):
+        # put the repo root on their path so they import the package
+        # whatever directory the driver runs from.
+        .config("spark.executorEnv.PYTHONPATH", _REPO_ROOT)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Keep catalog/warehouse state out of the repo cwd (bucketed-table
         # queries create managed-table metadata; data goes to explicit paths).

@@ -136,15 +136,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # co-resident workload that repoints the session timezone after
         # the first load must still raise at the read site. These are
         # conf-only checks (_nano_ts_columns is lru_cached — no I/O).
-        _assert_session_confs(spark, os.path.join(sf_dir, f"{name}.parquet"))
+        pin_read_confs(spark, os.path.join(sf_dir, f"{name}.parquet"))
     return df
 
 
-def _assert_session_confs(spark: SparkSession, path: str) -> None:
-    """Pin (and fail-loud-verify) the session confs a table read relies on."""
+def pin_read_confs(spark: SparkSession, path: str) -> None:
+    """Pin (and fail-loud-verify) the session confs a read of the parquet
+    at ``path`` relies on. Every engine read of a testdata table — batch
+    (``load_table``) and streaming (the scoped stream runner) — goes
+    through here, so a conflicting explicit conf raises at any read site."""
     if _nano_ts_columns(path):
         # Without this a vectorized parquet read of INT64 TIMESTAMP(NANOS)
-        # throws; with it the column arrives as a long we repair below.
+        # throws; with it the column arrives as a long that
+        # repair_timestamps converts.
         _require_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
     # Oracle comparisons are tz-naive; all timestamp extraction must agree
     # with DuckDB's wall-clock view of the same micros values.
@@ -152,7 +156,7 @@ def _assert_session_confs(spark: SparkSession, path: str) -> None:
         spark, "spark.sql.session.timeZone", "UTC", ok_values=_UTC_ALIASES
     )
     # Files written as isAdjustedToUTC=false micros would otherwise infer
-    # TIMESTAMP_NTZ, and the repair cast below — while value-identical
+    # TIMESTAMP_NTZ, and repair_timestamps' cast — while value-identical
     # under the UTC session — blocks parquet filter pushdown on every
     # timestamp predicate and adds a per-row cast. Reading them directly
     # as TimestampType is free and pushdown-friendly.
@@ -178,20 +182,30 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
     (never a silent overwrite) — see ``_require_conf``.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    _assert_session_confs(spark, path)
-    df = spark.read.parquet(path)
-    for col in _nano_ts_columns(path):
-        # nanos -> micros with integer `div` (float division would lose
-        # precision on epoch-scale int64); timestamp_micros -> TimestampType.
-        df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
+    pin_read_confs(spark, path)
+    return repair_timestamps(spark.read.parquet(path), path)
+
+
+def repair_timestamps(df: DataFrame, path: str) -> DataFrame:
+    """Restore TimestampType on a batch or streaming read of the parquet
+    at ``path`` (read under ``pin_read_confs``). Columns that already
+    carry TimestampType pass through unchanged, so a stream over files
+    the engine wrote from repaired frames is repaired as a no-op."""
+    nanos = _nano_ts_columns(path)
     for field in df.schema.fields:
-        # Files written as isAdjustedToUTC=false micros arrive as
-        # TIMESTAMP_NTZ under Spark's NTZ inference. The engine contract
-        # is TimestampType with UTC wall-clock semantics (streaming
-        # watermarks and from_utc_timestamp require it); with the session
-        # pinned to UTC above, the cast preserves the wall-clock value
-        # exactly — same micros DuckDB sees.
-        if isinstance(field.dataType, T.TimestampNTZType):
+        if field.name in nanos and isinstance(field.dataType, T.LongType):
+            # nanos -> micros with integer `div` (float division would lose
+            # precision on epoch-scale int64); timestamp_micros -> TimestampType.
+            df = df.withColumn(
+                field.name, F.timestamp_micros(F.expr(f"`{field.name}` div 1000"))
+            )
+        elif isinstance(field.dataType, T.TimestampNTZType):
+            # Files written as isAdjustedToUTC=false micros arrive as
+            # TIMESTAMP_NTZ under Spark's NTZ inference. The engine contract
+            # is TimestampType with UTC wall-clock semantics (streaming
+            # watermarks and from_utc_timestamp require it); with the session
+            # pinned to UTC, the cast preserves the wall-clock value
+            # exactly — same micros DuckDB sees.
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
     return df
 

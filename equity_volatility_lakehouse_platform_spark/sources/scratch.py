@@ -3,8 +3,10 @@
 Every scratch artifact the engine creates — streaming landing dirs,
 streaming checkpoints, ACID table roots for the sink queries — is
 EPHEMERAL by contract: created inside one query invocation (or one
-process) and deleted before it returns (``_run_stream_scoped``,
-``session_scratch``). Durability is therefore irrelevant for these
+process) and deleted before it returns. Every streaming query's landing
+dir, checkpoint and table roots live under one temp root owned by
+``streaming.events_stream._run_stream_scoped``; the sink queries use
+``sources.sinks.session_scratch``. Durability is therefore irrelevant for these
 paths, and their cost profile is many small file creates/renames —
 exactly the pattern journaling-disk filesystems serve worst. Profiled
 at sf0.1 (guide §1/§6): the stream-stream join cells spent ~1 s and

@@ -1,36 +1,49 @@
 """Structured Streaming layer (SURVEY.md §2.10).
 
 The reference is batch-only; its closest analogues are incremental sync
-(data_alpaca/bars.py:74-137) and pre-aggregated session windows
-(bars.py:139-351). For capability parity the engine exposes:
+with ON CONFLICT DO NOTHING (data_alpaca/bars.py:74-137, 196-198) and
+pre-aggregated session windows (bars.py:139-351). The engine reproduces
+them as real streaming queries over the events parquet: windowed and
+sliding aggregations, deduplication, stream-static and stream-stream
+joins, arbitrary-state and session-window sessionization, watermark
+late-data handling, and foreachBatch ingestion into the ACID and Delta
+tables (keyed merge, dead-letter routing, CDC apply, txn-idempotent
+append).
 
-* tumbling-window aggregation with a watermark over the events stream
-  (file source — the same parquet the batch path reads),
-* time-of-day session buckets as the batch analogue of session windows.
-
-``run_tumbling_stream`` runs a real streaming query (availableNow
-trigger -> memory sink) and returns the result as a batch DataFrame, so
-the exact streaming operator is oracle-checkable: with a complete
-pass over bounded input, watermarking drops nothing and the result must
-equal the batch GROUP BY.
+Every query runs through ONE runner, ``_run_stream_scoped``: it pins
+the read confs (``sources.readers.pin_read_confs``, fail-loud), lands
+the input in a temp root (symlinks of the events file, or frames the
+query supplies, one micro-batch per file), builds the query's graph
+over the repaired stream, starts it with an availableNow trigger into a
+memory sink or a foreachBatch callback, detaches the result with an
+eager localCheckpoint and deletes the temp root. A query therefore
+contributes only its graph, its batch callback and its result step.
+Over bounded input each run has a closed-form result, so every
+streaming operator is oracle-checkable.
 
 At scale: swap the file source for Kafka and the memory sink for a Delta
-sink; the transformation graph is unchanged.
+sink; the transformation graphs are unchanged.
 """
 
 from __future__ import annotations
 
+import inspect
 import json
 import os
 import shutil
 import tempfile
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from equity_volatility_lakehouse_platform_spark.sources.readers import _nano_ts_columns
+from equity_volatility_lakehouse_platform_spark.sources.readers import (
+    load_table,
+    pin_read_confs,
+    repair_timestamps,
+)
 from equity_volatility_lakehouse_platform_spark.sources.scratch import scratch_base
 from equity_volatility_lakehouse_platform_spark.functions.rounding import r6, r6s
 
@@ -61,7 +74,7 @@ LAST_PROGRESS: dict | None = None
 # Per-session schema memo for the streaming source probe (round 15,
 # guide §1/§5): every scoped streaming run re-probed the SAME immutable
 # events parquet (~0.1-0.3 s of driver-side footer read + Hadoop FS
-# setup per invocation). The callers pin the session confs BEFORE
+# setup per invocation). The runner pins the session confs BEFORE
 # probing and always to the same values, so the probe result is
 # conf-stable and the memo returns the identical StructType a fresh
 # probe would. Keyed by path; testdata is immutable within a session
@@ -94,6 +107,21 @@ def _n_state_partitions(
     )
 
 
+def _land_frames(frames: list[DataFrame], tmp_root: str, src_dir: str) -> None:
+    """Write each frame as ONE parquet file into ``src_dir``, in list
+    order. Distinct ascending mtimes plus lexical names fix the file
+    source's discovery order, so with ``maxFilesPerTrigger=1`` frame i
+    is exactly micro-batch i."""
+    now = time.time()
+    for i, frame in enumerate(frames):
+        out = os.path.join(tmp_root, f"land_{i}")
+        frame.coalesce(1).write.parquet(out)
+        part = next(f for f in os.listdir(out) if f.endswith(".parquet"))
+        dst = os.path.join(src_dir, f"batch_{i}.parquet")
+        os.replace(os.path.join(out, part), dst)
+        os.utime(dst, (now - 300 + 60 * i,) * 2)
+
+
 def _run_stream_scoped(
     spark: SparkSession,
     sf_dir: str,
@@ -103,111 +131,123 @@ def _run_stream_scoped(
     n_copies: int = 1,
     bytes_per_store: int = 16 << 20,
     min_stores: int = 8,
+    landing: list[DataFrame] | None = None,
+    max_files_per_trigger: int | None = None,
+    sink=None,
 ) -> DataFrame:
-    """Run a file-source streaming query to a memory sink with EVERY temp
-    artifact scoped to the call: one temp root holds the source symlink
-    dir (the file source requires a directory; a real deployment streams
-    a landing dir) and the checkpoint, and both are deleted — along with
-    the memory-sink view — once the result is snapshotted off the sink
-    via an eager localCheckpoint. Repeated invocations therefore leave no
-    dirs, checkpoints, or temp views behind (tests/test_domain.py
-    asserts this)."""
+    """Run one file-source streaming query with EVERY temp artifact
+    scoped to the call, and return its result as a detached batch
+    DataFrame.
+
+    One temp root holds the landing dir (the file source requires a
+    directory; a real deployment streams a landing dir), the checkpoint
+    and any table the sink writes. The landing is ``n_copies`` symlinks
+    of the events file, or — when the query supplies ``landing`` frames
+    — one written file per frame (``_land_frames``).
+    ``max_files_per_trigger`` splits the landing into that many files
+    per micro-batch. ``build(stream)`` (or ``build(stream,
+    make_stream)`` when the graph needs further independent readers of
+    the same landing, as stream-stream joins do) returns the query's
+    graph over the repaired stream.
+
+    ``sink=None`` writes to a memory sink and the result is the sink's
+    table. Otherwise ``sink(tmp_root)`` returns ``(on_batch, result)``:
+    each micro-batch goes to ``on_batch`` through foreachBatch, and
+    ``result()`` reads what it wrote. Either way the result is
+    snapshotted with an eager localCheckpoint before the temp root, the
+    sink view and any still-active query are removed, so repeated
+    invocations leave no dirs, checkpoints, views or streams behind
+    (tests/test_domain.py asserts this)."""
+    global LAST_PROGRESS
     path = os.path.join(sf_dir, "events.parquet")
     # Assert session confs at the read site, exactly like load_table: a
     # BARE session (the correctness driver's) would otherwise fail the
     # schema probe with PARQUET_TYPE_ILLEGAL if a streaming query is the
-    # first read of the session (no ordering dependence on an earlier
-    # batch read having set the conf).
-    if _nano_ts_columns(path):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Micros-NTZ files read directly as TimestampType (watermark needs
-    # LTZ); see load_table for the pushdown rationale.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    batch_schema = _events_schema(spark, path)
+    # first read of the session, and a conflicting explicit conf raises
+    # instead of being overwritten.
+    pin_read_confs(spark, path)
     tmp_root = tempfile.mkdtemp(prefix=prefix, dir=scratch_base())
-    src_dir = os.path.join(tmp_root, "src")
-    os.makedirs(src_dir)
-    # n_copies > 1 lands the same file several times (the at-least-once
-    # redelivery a dedup stream must absorb); each symlink is a distinct
-    # source file to the stream.
-    for i in range(n_copies):
-        os.symlink(path, os.path.join(src_dir, f"events_{i}.parquet"))
-
-    def _make_stream() -> DataFrame:
-        s = spark.readStream.schema(batch_schema).parquet(src_dir)
-        # Timestamp repair matches load_table: INT64-nanos files arrive
-        # as long (repaired via timestamp_micros), NTZ-micros files
-        # arrive as TIMESTAMP_NTZ (cast to TimestampType — watermarks
-        # require LTZ; the UTC session makes the cast wall-clock-exact).
-        # A source already carrying real timestamps streams as-is.
-        if isinstance(batch_schema["ts"].dataType, T.LongType):
-            s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(batch_schema["ts"].dataType, T.TimestampNTZType):
-            s = s.withColumn("ts", F.col("ts").cast("timestamp"))
-        return s
-
-    # build(stream) for single-input graphs; build(stream, make_stream)
-    # when the graph needs further independent readers of the same
-    # landing dir (stream-stream joins).
-    import inspect
-
-    n_params = len(inspect.signature(build).parameters)
-    built = build(_make_stream()) if n_params == 1 else build(
-        _make_stream(), _make_stream
-    )
     name = f"{prefix}{uuid.uuid4().hex[:8]}"
-    # State partitions size to STATE VOLUME, not to the session's batch
-    # parallelism (round 11): every stateful operator materializes one
-    # state store PER shuffle partition PER micro-batch, and the store's
-    # fixed commit/maintenance cost dominates small state — at sf0.1 the
-    # four stream-stream joins spent ~27 s under 32 stores vs ~14 s
-    # under 8 (interleaved A/B, SCALE.md round-11 addendum 3; RocksDB
-    # was SLOWER for bounded one-batch runs — per-store JNI setup). The
-    # count derives from the input size (default ~16 MB of input per
-    # store, floor 8, capped at the session's parallelism so a 100 TB
-    # landing dir still fans out) and is pinned at query start via the
-    # session conf, restored after — results are partition-count-
-    # independent (oracle-verified at every SF). ``bytes_per_store``
-    # is the operator's state-to-input ratio knob: stream-stream joins
-    # buffer only the watermark horizon (16 MB/store measured best,
-    # round-11 A/B), while append-mode session windows buffer EVERY
-    # input row's session until the horizon passes and then pay a
-    # store-serial eviction scan on the flush batch — at 100x keys the
-    # 8-store layout put a 9.1M-session eviction behind 8 threads
-    # (allRemovalsTimeMs 381 s, wall 580 s); 4 MB/store -> 28 stores
-    # cut the same run to 102 s (round-12 addendum 3).
-    # ``min_stores`` is the small-input floor and splits by where the
-    # operator's per-row work runs (round-14 interleaved floor probe at
-    # sf0.1; guide §2.2): JVM-state operators (stream-stream joins) are
-    # commit-overhead-bound at small state — every extra store adds
-    # fixed per-batch commit/maintenance cost (floors 2/4/8 measured
-    # 2.38/2.64/3.15 s on st16, 2.64/2.71/2.88 s on st14) — while
-    # Python-stateful operators (applyInPandasWithState) need TASK
-    # parallelism for their per-key Python work and regress hard below
-    # 8 (st17: 3.66 s at floor 8 vs 7.88 s at floor 2). Both floors
-    # bind only for small inputs; at scale the bytes-derived count
-    # governs either way.
-    n_state = _n_state_partitions(
-        _input_bytes(path),
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-        bytes_per_store,
-        min_stores,
-    )
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_state))
+    query = None
     try:
-        query = (
-            built
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
+        src_dir = os.path.join(tmp_root, "src")
+        os.makedirs(src_dir)
+        if landing is None:
+            schema = _events_schema(spark, path)
+            # n_copies > 1 lands the same file several times (the
+            # at-least-once redelivery a dedup stream must absorb); each
+            # symlink is a distinct source file to the stream.
+            for i in range(n_copies):
+                os.symlink(path, os.path.join(src_dir, f"events_{i}.parquet"))
+        else:
+            schema = landing[0].schema
+            _land_frames(landing, tmp_root, src_dir)
+        opts = {}
+        if max_files_per_trigger is not None:
+            opts["maxFilesPerTrigger"] = max_files_per_trigger
+
+        def _make_stream() -> DataFrame:
+            s = spark.readStream.schema(schema).options(**opts).parquet(src_dir)
+            return repair_timestamps(s, path)
+
+        if len(inspect.signature(build).parameters) == 1:
+            built = build(_make_stream())
+        else:
+            built = build(_make_stream(), _make_stream)
+        # State partitions size to STATE VOLUME, not to the session's batch
+        # parallelism (round 11): every stateful operator materializes one
+        # state store PER shuffle partition PER micro-batch, and the store's
+        # fixed commit/maintenance cost dominates small state — at sf0.1 the
+        # four stream-stream joins spent ~27 s under 32 stores vs ~14 s
+        # under 8 (interleaved A/B, SCALE.md round-11 addendum 3; RocksDB
+        # was SLOWER for bounded one-batch runs — per-store JNI setup). The
+        # count derives from the input size (default ~16 MB of input per
+        # store, floor 8, capped at the session's parallelism so a 100 TB
+        # landing dir still fans out) and is pinned at query start via the
+        # session conf, restored after — results are partition-count-
+        # independent (oracle-verified at every SF). ``bytes_per_store``
+        # is the operator's state-to-input ratio knob: stream-stream joins
+        # buffer only the watermark horizon (16 MB/store measured best,
+        # round-11 A/B), while append-mode session windows buffer EVERY
+        # input row's session until the horizon passes and then pay a
+        # store-serial eviction scan on the flush batch — at 100x keys the
+        # 8-store layout put a 9.1M-session eviction behind 8 threads
+        # (allRemovalsTimeMs 381 s, wall 580 s); 4 MB/store -> 28 stores
+        # cut the same run to 102 s (round-12 addendum 3).
+        # ``min_stores`` is the small-input floor and splits by where the
+        # operator's per-row work runs (round-14 interleaved floor probe at
+        # sf0.1; guide §2.2): JVM-state operators (stream-stream joins) are
+        # commit-overhead-bound at small state — every extra store adds
+        # fixed per-batch commit/maintenance cost (floors 2/4/8 measured
+        # 2.38/2.64/3.15 s on st16, 2.64/2.71/2.88 s on st14) — while
+        # Python-stateful operators (applyInPandasWithState) need TASK
+        # parallelism for their per-key Python work and regress hard below
+        # 8 (st17: 3.66 s at floor 8 vs 7.88 s at floor 2). Both floors
+        # bind only for small inputs; at scale the bytes-derived count
+        # governs either way.
+        # The sizing covers memory-sink runs over the events landing. A
+        # foreachBatch sink's merges are batch jobs that keep the
+        # session's count, and so does st09's supplied three-file landing,
+        # the layout its dual-watermark boundaries were probed under.
+        if sink is None and landing is None:
+            n_state = _n_state_partitions(
+                _input_bytes(path), int(prev_parts), bytes_per_store, min_stores
+            )
+            spark.conf.set("spark.sql.shuffle.partitions", str(n_state))
+        writer = (
+            built.writeStream.outputMode(output_mode)
             .option("checkpointLocation", os.path.join(tmp_root, "ckpt"))
             .trigger(availableNow=True)
-            .start()
         )
+        if sink is None:
+            writer = writer.format("memory").queryName(name)
+            result = lambda: spark.table(name)  # noqa: E731
+        else:
+            on_batch, result = sink(tmp_root)
+            writer = writer.foreachBatch(on_batch)
+        query = writer.start()
         query.awaitTermination()
-        global LAST_PROGRESS
         try:
             lp = query.lastProgress
             LAST_PROGRESS = (
@@ -216,10 +256,12 @@ def _run_stream_scoped(
             )
         except Exception:  # noqa: BLE001 — telemetry only, never fail a run
             LAST_PROGRESS = None
-        # Detach the result from the sink (executor-side materialization,
-        # no driver collect) so the sink view can be dropped immediately.
-        return spark.table(name).localCheckpoint(eager=True)
+        # Detach the result (executor-side materialization, no driver
+        # collect) so the sink view and temp root can be dropped now.
+        return result().localCheckpoint(eager=True)
     finally:
+        if query is not None and query.isActive:
+            query.stop()
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         spark.catalog.dropTempView(name)
         shutil.rmtree(tmp_root, ignore_errors=True)
@@ -377,7 +419,7 @@ def run_late_data_stream(
     """Watermark LATE-DATA semantics end-to-end, deterministically.
 
     The bounded replay is split into three ordered micro-batches
-    (``maxFilesPerTrigger=1``; files mtime- and name-ordered):
+    (one landed file each, ``maxFilesPerTrigger=1``):
 
     * batch 0 — "mid" rows: ``late_cut <= ts < head_cut``
     * batch 1 — "head" rows: ``ts >= head_cut`` (carries the global max)
@@ -408,64 +450,29 @@ def run_late_data_stream(
     """
     import datetime
 
-    path = os.path.join(sf_dir, "events.parquet")
-    if _nano_ts_columns(path):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    batch = spark.read.parquet(path)
-    if isinstance(batch.schema["ts"].dataType, T.LongType):
-        batch = batch.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(batch.schema["ts"].dataType, T.TimestampNTZType):
-        batch = batch.withColumn("ts", F.col("ts").cast("timestamp"))
-    max_ts = batch.agg(F.max("ts")).first()[0]  # one scalar, not data
+    events = load_table(spark, sf_dir, "events")
+    max_ts = events.agg(F.max("ts")).first()[0]  # one scalar, not data
     late_cut = max_ts - datetime.timedelta(days=3)
     head_cut = max_ts - datetime.timedelta(days=1)
-
-    tmp_root = tempfile.mkdtemp(prefix="evlate_", dir=scratch_base())
-    src_dir = os.path.join(tmp_root, "src")
-    os.makedirs(src_dir)
-    splits = [
-        ("0-mid", (F.col("ts") >= F.lit(late_cut)) & (F.col("ts") < F.lit(head_cut))),
-        ("1-head", F.col("ts") >= F.lit(head_cut)),
-        ("2-late", F.col("ts") < F.lit(late_cut)),
+    ts = F.col("ts")
+    landing = [
+        events.filter((ts >= F.lit(late_cut)) & (ts < F.lit(head_cut))),
+        events.filter(ts >= F.lit(head_cut)),
+        events.filter(ts < F.lit(late_cut)),
     ]
-    now = __import__("time").time()
-    for i, (name, pred) in enumerate(splits):
-        out = os.path.join(tmp_root, name)
-        batch.filter(pred).coalesce(1).write.parquet(out)
-        part = next(f for f in os.listdir(out) if f.endswith(".parquet"))
-        tgt = os.path.join(out, part)
-        # Distinct ascending mtimes + lexical names fix the batch order.
-        os.utime(tgt, (now - 300 + 60 * i,) * 2)
-        os.symlink(tgt, os.path.join(src_dir, f"{name}.parquet"))
 
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    agg = (
-        stream.withWatermark("ts", delay)
-        .groupBy(F.window("ts", window).alias("win"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), r6(F.sum("value")).alias("total_value"))
-        .select(F.col("win.start").alias("hour_ts"), "event_type", "n", "total_value")
-    )
-    name = f"evlate_{uuid.uuid4().hex[:8]}"
-    try:
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(tmp_root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+    def build(stream: DataFrame) -> DataFrame:
+        return (
+            stream.withWatermark("ts", delay)
+            .groupBy(F.window("ts", window).alias("win"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n"), r6(F.sum("value")).alias("total_value"))
+            .select(F.col("win.start").alias("hour_ts"), "event_type", "n", "total_value")
         )
-        query.awaitTermination()
-        return spark.table(name).localCheckpoint(eager=True)
-    finally:
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(tmp_root, ignore_errors=True)
+
+    return _run_stream_scoped(
+        spark, sf_dir, build, "evlate_", "append",
+        landing=landing, max_files_per_trigger=1,
+    )
 
 
 def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -529,52 +536,24 @@ def run_acid_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit-loop recheck makes the dedup hold even across concurrent
     writers. The final snapshot therefore contains each event exactly
     once, whatever the redelivery pattern: idempotence lives in the
-    table's keyed merge, not in fragile sink-side state.
-
-    Every artifact (landing dir, checkpoint, table root) is scoped to the
-    call and deleted after the result detaches via localCheckpoint."""
+    table's keyed merge, not in fragile sink-side state. The table root
+    lives in the runner's temp root."""
     from equity_volatility_lakehouse_platform_spark.sources.acid import AcidTable
 
-    path = os.path.join(sf_dir, "events.parquet")
-    if _nano_ts_columns(path):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    batch_schema = _events_schema(spark, path)
-    tmp_root = tempfile.mkdtemp(prefix="acidstream_", dir=scratch_base())
-    src_dir = os.path.join(tmp_root, "src")
-    os.makedirs(src_dir)
-    for i in range(2):
-        os.symlink(path, os.path.join(src_dir, f"events_{i}.parquet"))
-    table = AcidTable(spark, os.path.join(tmp_root, "table"))
-    try:
-        s = (
-            spark.readStream.schema(batch_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        if isinstance(batch_schema["ts"].dataType, T.LongType):
-            s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(batch_schema["ts"].dataType, T.TimestampNTZType):
-            s = s.withColumn("ts", F.col("ts").cast("timestamp"))
+    def sink(root: str):
+        table = AcidTable(spark, os.path.join(root, "table"))
 
         def ingest(batch_df: DataFrame, batch_id: int) -> None:
             table.merge_insert_only(batch_df, keys=["event_id"])
 
-        query = (
-            s.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", os.path.join(tmp_root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        return ingest, lambda: table.read().select(
+            "event_id", "user_id", "ts", r6(F.col("value")).alias("value")
         )
-        query.awaitTermination()
-        return (
-            table.read()
-            .select("event_id", "user_id", "ts", r6(F.col("value")).alias("value"))
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(tmp_root, ignore_errors=True)
+
+    return _run_stream_scoped(
+        spark, sf_dir, lambda s: s, "acidstream_", "append",
+        n_copies=2, max_files_per_trigger=1, sink=sink,
+    )
 
 
 def stream_static_enrich(
@@ -603,8 +582,6 @@ def stream_static_enrich(
 def run_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming variant end-to-end: file-source events stream joined to
     the static customer dim, daily per-segment totals to a memory sink."""
-    from equity_volatility_lakehouse_platform_spark.sources.readers import load_table
-
     dim = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
@@ -1107,29 +1084,16 @@ def run_dlq_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     summary. Nothing is dropped: main + DLQ partition the source."""
     from equity_volatility_lakehouse_platform_spark.sources.acid import AcidTable
 
-    path = os.path.join(sf_dir, "events.parquet")
-    if _nano_ts_columns(path):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    batch_schema = _events_schema(spark, path)
-    tmp_root = tempfile.mkdtemp(prefix="evdlq_", dir=scratch_base())
-    src_dir = os.path.join(tmp_root, "src")
-    os.makedirs(src_dir)
-    for i in range(2):  # at-least-once redelivery
-        os.symlink(path, os.path.join(src_dir, f"events_{i}.parquet"))
-    main = AcidTable(spark, os.path.join(tmp_root, "main"))
-    dlq = AcidTable(spark, os.path.join(tmp_root, "dlq"))
-    try:
-        s = (
-            spark.readStream.schema(batch_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+    def summarize(df: DataFrame, route: str) -> DataFrame:
+        return (
+            df.groupBy("event_type")
+            .agg(F.count(F.lit(1)).alias("n"), r6(F.sum("value")).alias("total_value"))
+            .select(F.lit(route).alias("route"), "*")
         )
-        if isinstance(batch_schema["ts"].dataType, T.LongType):
-            s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(batch_schema["ts"].dataType, T.TimestampNTZType):
-            s = s.withColumn("ts", F.col("ts").cast("timestamp"))
+
+    def sink(root: str):
+        main = AcidTable(spark, os.path.join(root, "main"))
+        dlq = AcidTable(spark, os.path.join(root, "dlq"))
 
         def route(batch_df: DataFrame, batch_id: int) -> None:
             ok = batch_df.filter(F.col("event_type") != "error")
@@ -1137,32 +1101,15 @@ def run_dlq_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             main.merge_insert_only(ok, keys=["event_id"])
             dlq.append(bad)
 
-        query = (
-            s.writeStream.foreachBatch(route)
-            .option("checkpointLocation", os.path.join(tmp_root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        return route, lambda: summarize(main.read(), "main").unionByName(
+            # DLQ is at-least-once by design
+            summarize(dlq.read().dropDuplicates(["event_id"]), "dlq")
         )
-        query.awaitTermination()
-        summary = (
-            main.read()
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"), r6(F.sum("value")).alias("total_value"))
-            .select(F.lit("main").alias("route"), "*")
-            .unionByName(
-                dlq.read()
-                .dropDuplicates(["event_id"])  # DLQ is at-least-once by design
-                .groupBy("event_type")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    r6(F.sum("value")).alias("total_value"),
-                )
-                .select(F.lit("dlq").alias("route"), "*")
-            )
-        )
-        return summary.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp_root, ignore_errors=True)
+
+    return _run_stream_scoped(
+        spark, sf_dir, lambda s: s, "evdlq_", "append",
+        n_copies=2, max_files_per_trigger=1, sink=sink,
+    )
 
 
 def run_cdc_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1185,64 +1132,42 @@ def run_cdc_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed-key % 5 == 0 clicks, with value + 1.0 on the surviving
     seed-key % 5 == 0 rows."""
     from equity_volatility_lakehouse_platform_spark.sources.acid import AcidTable
-    from equity_volatility_lakehouse_platform_spark.sources.readers import (
-        load_table,
-    )
 
     events = load_table(spark, sf_dir, "events")
-    tmp_root = tempfile.mkdtemp(prefix="cdcstream_", dir=scratch_base())
-    src_dir = os.path.join(tmp_root, "src")
-    try:
-        seed = events.filter(F.col("event_id") % 3 != 2)
-        table = AcidTable(spark, os.path.join(tmp_root, "table"))
-        table.overwrite(seed)
-        inserts = events.filter(F.col("event_id") % 3 == 2).withColumn(
-            "_tombstone", F.lit(False)
+    inserts = events.filter(F.col("event_id") % 3 == 2).withColumn(
+        "_tombstone", F.lit(False)
+    )
+    ops = (
+        events.filter(
+            (F.col("event_id") % 3 != 2) & (F.col("event_id") % 5 == 0)
         )
-        ops = (
-            events.filter(
-                (F.col("event_id") % 3 != 2) & (F.col("event_id") % 5 == 0)
-            )
-            .withColumn("_tombstone", F.col("event_type") == "click")
-            .withColumn(
-                "value",
-                F.when(
-                    F.col("event_type") == "click", F.col("value")
-                ).otherwise(F.col("value") + F.lit(1.0)),
-            )
+        .withColumn("_tombstone", F.col("event_type") == "click")
+        .withColumn(
+            "value",
+            F.when(
+                F.col("event_type") == "click", F.col("value")
+            ).otherwise(F.col("value") + F.lit(1.0)),
         )
-        inserts.coalesce(1).write.parquet(os.path.join(src_dir, "b0"))
-        ops.coalesce(1).write.parquet(os.path.join(src_dir, "b1"))
-        stream_schema = inserts.schema
-        s = (
-            spark.readStream.schema(stream_schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src_dir)
-        )
+    )
+
+    def sink(root: str):
+        table = AcidTable(spark, os.path.join(root, "table"))
+        table.overwrite(events.filter(F.col("event_id") % 3 != 2))
 
         def apply_cdc(batch_df: DataFrame, batch_id: int) -> None:
             table.merge_full(
                 batch_df, keys=["event_id"], tombstone_col="_tombstone"
             )
 
-        query = (
-            s.writeStream.foreachBatch(apply_cdc)
-            .option("checkpointLocation", os.path.join(tmp_root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        return apply_cdc, lambda: table.read().select(
+            "event_id", "user_id", "ts", "event_type",
+            r6(F.col("value")).alias("value"),
         )
-        query.awaitTermination()
-        return (
-            table.read()
-            .select(
-                "event_id", "user_id", "ts", "event_type",
-                r6(F.col("value")).alias("value"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(tmp_root, ignore_errors=True)
+
+    return _run_stream_scoped(
+        spark, sf_dir, lambda s: s, "cdcstream_", "append",
+        landing=[inserts, ops], max_files_per_trigger=1, sink=sink,
+    )
 
 
 def run_delta_txn_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1256,69 +1181,38 @@ def run_delta_txn_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     The failure mode under test is the foreachBatch retry race: the
     sink committed batch 0 but the stream checkpoint did not advance,
     so on restart the SAME batch is delivered again. After the stream
-    completes, the test replays batch 0 by hand — ``append_txn`` must
-    skip it (version ≤ the table's txn watermark), so the snapshot
-    holds each event exactly once and the oracle is simply the source.
-    A later batch (version advanced) still lands, proving the skip is
-    the watermark, not a closed table.
-
-    Every artifact (landing dir, checkpoint, table root) is scoped to
-    the call and deleted after the result detaches via localCheckpoint.
+    completes, the result step replays batch 0 (the whole events file)
+    by hand — ``append_txn`` must skip it (version ≤ the table's txn
+    watermark), so the snapshot holds each event exactly once and the
+    oracle is simply the source. A later batch (version advanced) still
+    lands, proving the skip is the watermark, not a closed table. The
+    table root lives in the runner's temp root.
     """
     from equity_volatility_lakehouse_platform_spark.sources.delta_compat import (
         DeltaCompatTable,
     )
 
-    path = os.path.join(sf_dir, "events.parquet")
-    if _nano_ts_columns(path):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    batch_schema = _events_schema(spark, path)
-    tmp_root = tempfile.mkdtemp(prefix="deltastream_", dir=scratch_base())
-    src_dir = os.path.join(tmp_root, "src")
-    os.makedirs(src_dir)
-    os.symlink(path, os.path.join(src_dir, "events_0.parquet"))
-    table = DeltaCompatTable(spark, os.path.join(tmp_root, "table"))
     app_id = "st23_delta_ingest"
-    try:
-        s = (
-            spark.readStream.schema(batch_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        if isinstance(batch_schema["ts"].dataType, T.LongType):
-            s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(batch_schema["ts"].dataType, T.TimestampNTZType):
-            s = s.withColumn("ts", F.col("ts").cast("timestamp"))
+
+    def sink(root: str):
+        table = DeltaCompatTable(spark, os.path.join(root, "table"))
 
         def ingest(batch_df: DataFrame, batch_id: int) -> None:
             table.append_txn(batch_df, app_id=app_id, version=batch_id)
 
-        query = (
-            s.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", os.path.join(tmp_root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        # The retry race: replay batch 0 verbatim — MUST be a no-op.
-        replay = spark.read.schema(batch_schema).parquet(src_dir)
-        if isinstance(batch_schema["ts"].dataType, T.LongType):
-            replay = replay.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        elif isinstance(batch_schema["ts"].dataType, T.TimestampNTZType):
-            replay = replay.withColumn("ts", F.col("ts").cast("timestamp"))
-        assert table.append_txn(replay, app_id=app_id, version=0) is None, (
-            "replayed micro-batch must be skipped by the txn watermark"
-        )
-        return (
-            table.read()
-            .select(
+        def result() -> DataFrame:
+            replay = load_table(spark, sf_dir, "events")
+            if table.append_txn(replay, app_id=app_id, version=0) is not None:
+                raise RuntimeError(
+                    "replayed micro-batch must be skipped by the txn watermark"
+                )
+            return table.read().select(
                 "event_id", "user_id", "ts", r6(F.col("value")).alias("value")
             )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(tmp_root, ignore_errors=True)
+
+        return ingest, result
+
+    return _run_stream_scoped(
+        spark, sf_dir, lambda s: s, "deltastream_", "append",
+        max_files_per_trigger=1, sink=sink,
+    )

@@ -648,20 +648,30 @@ def test_scratch_base_fallback_decisions(monkeypatch, tmp_path):
 
 
 def test_streaming_runs_leave_no_temp_artifacts(spark, sf_dir):
-    # st03/st04 hygiene: every invocation must clean up its source symlink
-    # dir, checkpoint, and memory-sink view (a long-lived session calling
-    # the streaming queries repeatedly must not accumulate anything).
+    # Streaming hygiene: every invocation must clean up its landing dir,
+    # checkpoint, table roots, memory-sink view and query (a long-lived
+    # session calling the streaming queries repeatedly must not
+    # accumulate anything) — memory-sink and foreachBatch runs alike.
     import tempfile as tf
 
-    from equity_volatility_lakehouse_platform_spark.streaming.events_stream import (
-        run_dedup_stream,
-        run_stateful_totals_stream,
-        run_tumbling_stream,
+    from equity_volatility_lakehouse_platform_spark.streaming import (
+        events_stream as es,
     )
 
     from equity_volatility_lakehouse_platform_spark.sources.scratch import (
         scratch_base,
     )
+
+    runs = {
+        "evstream_": es.run_tumbling_stream,
+        "evstate_": es.run_stateful_totals_stream,
+        "evdedup_": es.run_dedup_stream,
+        "evlate_": es.run_late_data_stream,
+        "acidstream_": es.run_acid_ingest_stream,
+        "evdlq_": es.run_dlq_ingest_stream,
+        "cdcstream_": es.run_cdc_apply_stream,
+        "deltastream_": es.run_delta_txn_ingest_stream,
+    }
 
     def temp_dirs():
         roots = {tf.gettempdir(), scratch_base() or tf.gettempdir()}
@@ -669,19 +679,18 @@ def test_streaming_runs_leave_no_temp_artifacts(spark, sf_dir):
             (root, d)
             for root in roots
             for d in os.listdir(root)
-            if d.startswith(("evstream_", "evstate_", "evdedup_"))
+            if d.startswith(tuple(runs))
         }
 
     before_dirs = temp_dirs()
     before_views = {t.name for t in spark.catalog.listTables()}
-    n1 = run_tumbling_stream(spark, sf_dir).count()
-    n2 = run_stateful_totals_stream(spark, sf_dir).count()
-    n3 = run_dedup_stream(spark, sf_dir).count()
-    assert n1 > 0 and n2 > 0 and n3 > 0
+    counts = {prefix: run(spark, sf_dir).count() for prefix, run in runs.items()}
+    assert all(n > 0 for n in counts.values()), counts
     assert temp_dirs() == before_dirs, "streaming run leaked temp dirs"
     assert {t.name for t in spark.catalog.listTables()} == before_views, (
         "streaming run leaked memory-sink views"
     )
+    assert spark.streams.active == [], "streaming run left a query active"
 
 
 def test_money_guard_3dp_fixture(spark, tmp_path):
@@ -758,6 +767,51 @@ def test_load_table_rejects_conflicting_explicit_conf(spark, sf_dir):
             load_table(spark, sf_dir, "events")
     finally:
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+
+    # Streaming reads pin through the same helper: building a streaming
+    # query raises instead of silently resetting the zone to UTC.
+    from equity_volatility_lakehouse_platform_spark.plans.streaming_plans import (
+        st12_acid_ingest_stream,
+    )
+
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+        with _pytest.raises(ValueError, match="spark.sql.session.timeZone"):
+            st12_acid_ingest_stream(spark, sf_dir)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def test_python_workers_import_package_from_any_cwd(sf_dir, tmp_path):
+    # st17's applyInPandasWithState kernel is unpickled on Python
+    # workers by module path. The driver here has the package only on
+    # its sys.path and runs from a cwd outside the repo, so the workers
+    # must get the package from the session, not from their cwd.
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from equity_volatility_lakehouse_platform_spark.session import get_spark\n"
+        "from equity_volatility_lakehouse_platform_spark.plans.streaming_plans "
+        "import st17_stateful_timeout_sessions\n"
+        "spark = get_spark(app_name='evlp-cwd', cpus=2, shuffle_partitions=2)\n"
+        f"print('rows', st17_stateful_timeout_sessions(spark, {sf_dir!r}).count())\n"
+        "spark.stop()\n"
+    )
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g")
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and os.path.abspath(p) != repo
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=900,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "rows " in proc.stdout
 
 
 def test_curation_dag_edge_corpora(spark, tmp_path):
