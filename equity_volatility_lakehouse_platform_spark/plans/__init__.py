@@ -5,11 +5,18 @@ Every operator from SURVEY.md §2 is registered here as a named query
 string. ``__spark_entry__.py`` exposes these to the correctness driver.
 """
 
+from pyspark import cloudpickle
+
+from equity_volatility_lakehouse_platform_spark.plans import fold
 from equity_volatility_lakehouse_platform_spark.plans.registry import (
     all_oracles,
     all_queries,
     register,
 )
+
+# Arrow kernels call the fold helpers on Python workers, which may not be
+# able to import this package: pickle the helpers into the kernel itself.
+cloudpickle.register_pickle_by_value(fold)
 
 
 def load_all() -> None:

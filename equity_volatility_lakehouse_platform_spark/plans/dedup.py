@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from equity_volatility_lakehouse_platform_spark.operators import textops as tx
+from equity_volatility_lakehouse_platform_spark.plans.fold import cosine_scores
 from equity_volatility_lakehouse_platform_spark.plans.registry import register
 from equity_volatility_lakehouse_platform_spark.sources.readers import load_table, table_rows
 from equity_volatility_lakehouse_platform_spark.functions.rounding import r6, r6s
@@ -1523,7 +1524,7 @@ def d17_semantic_dedup(
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
         V = np.stack(pdf["v"].to_numpy())           # (n, D)
         nv = pdf["nv"].to_numpy()
-        n, D = V.shape
+        n = len(V)
         # RUNTIME GUARD (the skew_guard philosophy — fail loud with the
         # mitigation, never hang): the epsilon-ball prune is O(n^2) per
         # cluster BY DESIGN (SemDeDup's tractability comes from K
@@ -1537,22 +1538,14 @@ def d17_semantic_dedup(
                 "(the engine provisions K = ceil(N/256)) so clusters stay "
                 "memory-sized"
             )
-        # Dimension-sequential accumulation: G[i,j] folds sum_d v_i[d] *
-        # v_j[d] in ascending d — the exact left-fold sequence of
-        # list_dot_product / the JVM aggregate (same recipe as
-        # ivf_assign/pq_encode). BLOCKWISE over i-rows so peak memory is
-        # O(block * n), not O(n^2).
+        # Pair cosines are fold.cosine_scores — the left-fold sequence
+        # of list_dot_product / the JVM aggregate — BLOCKWISE over
+        # i-rows so peak memory is O(block * n), not O(n^2).
         mx = np.full(n, np.nan)
         block = 1024
         for lo in range(0, n, block):
             hi = min(lo + block, n)
-            Vb = V[lo:hi]
-            G = np.outer(Vb[:, 0], V[:, 0])
-            for d in range(1, D):
-                G = G + np.outer(Vb[:, d], V[:, d])
-            den = np.outer(nv[lo:hi], nv)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(den == 0.0, np.nan, G / den)
+            cos = cosine_scores(V[lo:hi], V, nv[lo:hi], nv, np.nan)
             # j < i only: mask columns >= the row's global index.
             cols = np.arange(n)[None, :]
             rows = np.arange(lo, hi)[:, None]

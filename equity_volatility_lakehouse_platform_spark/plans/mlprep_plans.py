@@ -6,6 +6,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from equity_volatility_lakehouse_platform_spark.operators import textops as tx
+from equity_volatility_lakehouse_platform_spark.plans.fold import fold_dot, fold_self
 from equity_volatility_lakehouse_platform_spark.plans.registry import register
 from equity_volatility_lakehouse_platform_spark.sources.readers import load_table
 from equity_volatility_lakehouse_platform_spark.functions.rounding import r6, r6s
@@ -706,11 +707,11 @@ def ml18_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pq_encode situation — so it takes the same recipe: the 8 x 64
     # sin-weight matrix is evaluated ONCE on the JVM (F.sin over
     # literals — the identical Math.sin doubles the oracle was verified
-    # against), closed over, and each Arrow batch accumulates
-    # DIMENSION-SEQUENTIALLY (acc = acc + V[:, i] * w[j, i], i
-    # ascending) — vectorized across rows with the per-row add sequence
-    # identical to list_dot_product's left fold. np.sqrt and the final
-    # division are single correctly-rounded IEEE ops on both engines.
+    # against), closed over, and each Arrow batch projects and takes
+    # norms with fold.fold_dot / fold.fold_self — vectorized across rows
+    # with the per-row add sequence of list_dot_product's left fold.
+    # np.sqrt and the final division are single correctly-rounded IEEE
+    # ops on both engines.
     wrow = (
         spark.range(1)
         .select(
@@ -733,30 +734,18 @@ def ml18_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         import pandas as pd
 
         W = np.array(w_mat)  # (8, 64)
-        K, D = W.shape
         for pdf in batches:
             if not len(pdf):
                 continue
             V = np.stack(pdf["v"].to_numpy())  # (n, 64)
-            Y = np.empty((len(V), K))
-            for j in range(K):
-                acc = V[:, 0] * W[j, 0]
-                for i in range(1, D):
-                    acc = acc + V[:, i] * W[j, i]  # left-fold order
-                Y[:, j] = acc
-            dot_y = Y[:, 0] * Y[:, 0]
-            for j in range(1, K):
-                dot_y = dot_y + Y[:, j] * Y[:, j]
-            dot_v = V[:, 0] * V[:, 0]
-            for i in range(1, D):
-                dot_v = dot_v + V[:, i] * V[:, i]
-            den = np.sqrt(dot_v)
+            Y = fold_dot(V, W)  # (n, 8)
+            den = np.sqrt(fold_self(V))
             with np.errstate(divide="ignore", invalid="ignore"):
                 ratio = np.where(
-                    den == 0.0, np.nan, np.sqrt(dot_y * 8.0) / den
+                    den == 0.0, np.nan, np.sqrt(fold_self(Y) * 8.0) / den
                 )
             out = {"vec_id": pdf["vec_id"]}
-            for j in range(K):
+            for j in range(len(W)):
                 out[f"y{j + 1}"] = Y[:, j]
             out["norm_ratio"] = ratio
             yield pd.DataFrame(out)

@@ -15,6 +15,13 @@ from pyspark.sql import functions as F
 from equity_volatility_lakehouse_platform_spark.plans.registry import register
 from equity_volatility_lakehouse_platform_spark.sources.readers import load_table, table_rows
 from equity_volatility_lakehouse_platform_spark.functions.rounding import r6
+from equity_volatility_lakehouse_platform_spark.plans.fold import (
+    cosine_scores,
+    fold_dot,
+    fold_self,
+    l2_distances,
+    lloyd,
+)
 
 import re as _re
 
@@ -142,10 +149,10 @@ def lsh_bucket_frame(
     WHOLE stage — including the pair cosines — runs interpreted; d06
     measured 103s at 100x that way), while the earlier HOF fold ran
     interpreted by construction. Bit-exactness is structural: the
-    accumulation is dimension-sequential (ascending d, one add per
-    step — the exact left-fold sequence of the SQL list_reduce), the
-    hyperplane weights are Python-libm sins (bit-identical to DuckDB's,
-    verified 0/1088), and the output is an INTEGER bucket id.
+    projections are ``fold.fold_dot`` (the left-fold add sequence of
+    the SQL ``list_dot_product``), the hyperplane weights are
+    Python-libm sins (bit-identical to DuckDB's, verified 0/1088), and
+    the output is an INTEGER bucket id.
     """
     import math
 
@@ -155,10 +162,10 @@ def lsh_bucket_frame(
 
     w = np.array(
         [
-            [math.sin(float(i * j)) for j in range(1, bits + 1)]
-            for i in range(1, 65)
+            [math.sin(float(i * j)) for i in range(1, 65)]
+            for j in range(1, bits + 1)
         ]
-    )  # (64, bits)
+    )  # (bits, 64)
     # Fresh StructType — StructType.add MUTATES, and df.schema is the
     # DataFrame's cached object.
     schema = T.StructType(
@@ -183,11 +190,7 @@ def lsh_bucket_frame(
                     f"lsh_bucket_frame: column {vec_col!r} contains NULL "
                     "or non-64-dim embeddings; filter or fix upstream"
                 )
-            V = np.stack(vals)  # (n, 64)
-            acc = np.zeros((len(pdf), bits))
-            for d in range(64):
-                # one add per dimension == the fold's summation order
-                acc = acc + np.outer(V[:, d], w[d])
+            acc = fold_dot(np.stack(vals), w)  # (n, bits)
             b = np.zeros(len(pdf), dtype=np.int64)
             for j in range(bits):
                 b = b * 2 + (acc[:, j] >= 0).astype(np.int64)
@@ -283,18 +286,65 @@ def _ivf_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ivf_scorer(
+    emb: DataFrame, cent: DataFrame, n_keep: int, emit, schema: str
+) -> DataFrame:
+    """The broadcast-codebook cosine scorer behind ``ivf_assign`` (top-1)
+    and ``ivf_probe_topn`` (top-n): one Arrow map pass over ``emb``
+    (vec_id, v, nv) in the scan's own partitions. Each 2048-row block
+    scores every centroid with ``fold.cosine_scores`` (the SQL
+    ``dot / NULLIF(nv * nc, 0)``, zero denominators -inf == NULLS LAST)
+    and keeps the ``n_keep`` best centroids per row in ``ORDER BY cosc
+    DESC, cid`` order: argmax for one (first index over the cid-sorted
+    axis), a stable argsort for more — ties go to the lowest cid.
+    ``emit(pdf, cids)`` shapes each output batch from the (rows,
+    n_keep) cid matrix."""
+    import numpy as np
+
+    cent_rows = sorted(cent.collect(), key=lambda r: r["cid"])
+    bc = emb.sparkSession.sparkContext.broadcast(
+        (
+            np.array([r["cid"] for r in cent_rows], dtype=np.int64),
+            np.array([list(r["cv"]) for r in cent_rows]),  # (K, D)
+            np.array([r["nc"] for r in cent_rows], dtype=np.float64),
+        )
+    )
+
+    def _score(batches):
+        import numpy as np
+
+        IDS, C, NC = bc.value
+        keep = min(n_keep, len(IDS))
+        block = 2048
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            V = np.stack(pdf["v"].to_numpy())          # (n, D)
+            nv = pdf["nv"].to_numpy()                  # (n,)
+            top = np.empty((len(V), keep), dtype=np.int64)
+            for lo in range(0, len(V), block):
+                cosc = cosine_scores(
+                    V[lo:lo + block], C, nv[lo:lo + block], NC
+                )
+                if keep == 1:
+                    top[lo:lo + block, 0] = np.argmax(cosc, axis=1)
+                else:
+                    top[lo:lo + block] = np.argsort(
+                        -cosc, axis=1, kind="stable"
+                    )[:, :keep]
+            yield emit(pdf, IDS[top])
+
+    return emb.mapInPandas(_score, schema)
+
+
 def ivf_assign(emb: DataFrame, cent: DataFrame) -> DataFrame:
     """Inverted-list coarse assignment WITHOUT a corpus shuffle
-    (round-8): an Arrow-batched mapInPandas scorer (the repo's accepted
-    executor-Python pattern — this is a genuinely numeric kernel,
-    exactly FAISS's BLAS-backed coarse scan). The tiny centroid set
-    (metadata-scale collect) is closed over, and each batch scores all
-    centroids with DIMENSION-SEQUENTIAL accumulation
-    (acc += v[:, i] * c[i], i ascending) — vectorized across rows but
-    the per-row ADD SEQUENCE is identical to the JVM/DuckDB left fold,
-    so cosc and the argmax are bit-exact (ties -> first index = lowest
-    cid, mirroring ORDER BY cosc DESC, cid). The map stage runs in the
-    scan's own partitions. Shared by sim04 and sim08.
+    (round-8): each (vec_id, v, nv) row gets the cid of its max-cosine
+    centroid, ties to the lowest cid (``ORDER BY cosc DESC, cid``),
+    through the Arrow scorer ``_ivf_scorer`` — a genuinely numeric
+    kernel, exactly FAISS's BLAS-backed coarse scan, whose left-fold
+    cosines are bit-exact against the JVM/DuckDB fold. Shared by sim04,
+    sim08, d17, ml23 and the cosine Lloyd step.
 
     SCALING CONTRACT (round 14, r13 ADVICE): the codebook is collected
     once on the driver (K rows) and shipped via spark BROADCAST — one
@@ -314,53 +364,9 @@ def ivf_assign(emb: DataFrame, cent: DataFrame) -> DataFrame:
     the trainer and the at-or-below-ceiling queries use. The prune/
     candidate volume downstream of assignment remains linear in N
     either way."""
-    cent_rows = sorted(cent.collect(), key=lambda r: r["cid"])
-    bc = emb.sparkSession.sparkContext.broadcast(
-        (
-            [int(r["cid"]) for r in cent_rows],
-            [list(r["cv"]) for r in cent_rows],
-            [float(r["nc"]) for r in cent_rows],
-        )
-    )
-
-    def _assign(batches):
-        import numpy as np
-
-        c_ids, c_vecs, c_norms = bc.value
-        C = np.array(c_vecs)          # (K, D)
-        NC = np.array(c_norms)        # (K,)
-        K, D = C.shape
-        IDS = np.array(c_ids)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.stack(pdf["v"].to_numpy())          # (n, D)
-            nv = pdf["nv"].to_numpy()                  # (n,)
-            n = len(V)
-            best = np.empty(n, dtype=np.int64)
-            # DIMENSION-major accumulation over row blocks (round 13 —
-            # d17's _prune recipe): one (block, K) add per dimension in
-            # ascending d, so every (row, centroid) cell folds in the
-            # identical left-to-right sequence as before (and as the
-            # JVM/DuckDB fold), but the Python-level loop is D long
-            # instead of K*D — at auto-provisioned K ~ N/256 the old
-            # per-centroid loop was the 100x-spot bottleneck (62s of
-            # 84s). Blocking bounds the temp at block*K doubles.
-            block = 2048
-            for lo in range(0, n, block):
-                hi = min(lo + block, n)
-                Vb = V[lo:hi]
-                acc = np.multiply.outer(Vb[:, 0], C[:, 0])      # (b, K)
-                for d in range(1, D):
-                    acc = acc + np.multiply.outer(Vb[:, d], C[:, d])
-                den = np.multiply.outer(nv[lo:hi], NC)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cosc = np.where(den == 0.0, -np.inf, acc / den)
-                best[lo:hi] = np.argmax(cosc, axis=1)  # ties -> lowest j
-            yield pdf.assign(cid=IDS[best])
-
-    return emb.mapInPandas(
-        _assign, "vec_id bigint, v array<double>, nv double, cid bigint"
+    return _ivf_scorer(
+        emb, cent, 1, lambda pdf, cids: pdf.assign(cid=cids[:, 0]),
+        "vec_id bigint, v array<double>, nv double, cid bigint",
     )
 
 
@@ -391,76 +397,34 @@ def ivf_probe(
 
 def ivf_probe_topn(emb_q: DataFrame, cent: DataFrame, nprobe: int) -> DataFrame:
     """Top-``nprobe`` coarse-centroid probe WITHOUT a query-side
-    crossJoin (round 13 — ivf_assign's Arrow recipe extended from
+    crossJoin (round 13 — ivf_assign's Arrow scorer extended from
     argmax to arg-top-n, for eval sets that SCALE with the corpus).
     ml23's eval set is ``N / eval_mod`` queries; scoring it against an
     auto-provisioned K ~ N/256 codebook via crossJoin + window is
     O(N^2/(eval_mod*256)) rows through the interpreted HOF fold,
-    whereas this kernel is one numpy pass per Arrow batch in the scan's
-    own partitions. Bit-exactness is the ivf_assign argument: cosc
-    accumulates DIMENSION-SEQUENTIALLY (the DuckDB/JVM left-fold
-    order), zero denominators become -inf (== SQL NULL under DuckDB's
-    default NULLS LAST), and ties resolve by ascending cid via a STABLE
-    argsort over the cid-sorted centroid axis — exactly ``row_number()
-    OVER (ORDER BY cosc DESC, cid)`` <= nprobe. Emits (q_id, qv, qcid),
-    one row per (query, probed list). The codebook ships as a spark
-    BROADCAST (ivf_assign's round-14 contract — one transfer per
-    executor, not a per-task closure pickle); the same O(N*K*D) /
-    single-level-quantizer ceiling note applies."""
-    cent_rows = sorted(cent.collect(), key=lambda r: r["cid"])
-    bc = emb_q.sparkSession.sparkContext.broadcast(
-        (
-            [int(r["cid"]) for r in cent_rows],
-            [list(r["cv"]) for r in cent_rows],
-            [float(r["nc"]) for r in cent_rows],
-        )
-    )
+    whereas ``_ivf_scorer`` is one numpy pass per Arrow batch in the
+    scan's own partitions, with exactly ``row_number() OVER (ORDER BY
+    cosc DESC, cid) <= nprobe`` semantics (pinned against ``ivf_probe``
+    in tests/test_properties.py). Emits (q_id, qv, qcid), one row per
+    (query, probed list); the same O(N*K*D) / single-level-quantizer
+    ceiling note as ``ivf_assign`` applies."""
 
-    def _probe(batches):
+    def _emit(pdf, cids):
         import numpy as np
         import pandas as pd
 
-        c_ids, c_vecs, c_norms = bc.value
-        C = np.array(c_vecs)          # (K, D)
-        NC = np.array(c_norms)        # (K,)
-        IDS = np.array(c_ids)
-        K, D = C.shape
-        n_keep = min(nprobe, K)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.stack(pdf["v"].to_numpy())          # (n, D)
-            nv = pdf["nv"].to_numpy()                  # (n,)
-            n = len(V)
-            top = np.empty((n, n_keep), dtype=np.int64)
-            # dimension-major blocked accumulation — see ivf_assign.
-            block = 2048
-            for lo in range(0, n, block):
-                hi = min(lo + block, n)
-                Vb = V[lo:hi]
-                acc = np.multiply.outer(Vb[:, 0], C[:, 0])      # (b, K)
-                for d in range(1, D):
-                    acc = acc + np.multiply.outer(Vb[:, d], C[:, d])
-                den = np.multiply.outer(nv[lo:hi], NC)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cosc = np.where(den == 0.0, -np.inf, acc / den)
-                # stable sort over the ascending-cid axis == ties ->
-                # lowest cid
-                top[lo:hi] = np.argsort(-cosc, axis=1, kind="stable")[
-                    :, :n_keep
-                ]
-            yield pd.DataFrame(
-                {
-                    "q_id": np.repeat(pdf["vec_id"].to_numpy(), n_keep),
-                    "qv": np.repeat(pdf["v"].to_numpy(), n_keep),
-                    "qcid": IDS[top].ravel(),
-                }
-            )
+        n = cids.shape[1]
+        return pd.DataFrame(
+            {
+                "q_id": np.repeat(pdf["vec_id"].to_numpy(), n),
+                "qv": np.repeat(pdf["v"].to_numpy(), n),
+                "qcid": cids.ravel(),
+            }
+        )
 
-    return emb_q.mapInPandas(
-        _probe, "q_id bigint, qv array<double>, qcid bigint"
+    return _ivf_scorer(
+        emb_q, cent, nprobe, _emit, "q_id bigint, qv array<double>, qcid bigint"
     )
-
 
 
 # Bounded-sample training runs FUSED in one Arrow task up to this many
@@ -472,97 +436,43 @@ def ivf_probe_topn(emb_q: DataFrame, cent: DataFrame, nprobe: int) -> DataFrame:
 # (broadcast joins + collect_list shuffles + interpreted HOF mean folds
 # + re-executed lineage per Lloyd step) cost ~3.2 s per PQ training and
 # ~1.5 s per coarse training at sf0.1 on a quiet local[32] — pure
-# orchestration over a <= 1 MB sample. The fused kernel computes the
-# identical fold sequences (assignment = the ivf_assign/pq_encode
-# kernels' dimension-sequential accumulation; means = the ordered
-# left-fold over members by vec_id; norms = the dot() left fold) in a
-# single mapInPandas task fed by ONE exchange of the bounded sample, so
-# the trained codebooks are BIT-IDENTICAL (pinned by
+# orchestration over a <= 1 MB sample. The fused kernel
+# (``_lloyd_fused`` over ``fold.lloyd``) computes the identical fold
+# sequences as the DataFrame step ``_lloyd_step`` (assignment = the
+# fold scorers; means = the ordered left fold over members by vec_id;
+# norms = the dot() left fold) in a single mapInPandas task fed by ONE
+# exchange of the bounded sample, so the trained codebooks are
+# BIT-IDENTICAL (pinned by
 # tests/test_properties.py::test_fused_trainers_match_distributed_path
-# and the K=288 cross-engine mirror test). Above the ceiling the
-# original distributed per-step path runs unchanged.
+# and the K=288 cross-engine mirror test). ``_train_codebook`` picks
+# the path from ``train_limit`` alone; above the ceiling the step runs
+# once per iteration.
 _FUSED_TRAIN_MAX = 65536
 
 
-def _ivf_train_fused(
-    train: DataFrame, n_centroids: int, iters: int
-) -> DataFrame:
-    """Spherical k-means over the bounded (vec_id, v, nv) sample in one
-    Arrow task — see _FUSED_TRAIN_MAX for why and for the bit-exactness
-    argument. The sample arrives via one tiny exchange (repartition(1)
-    keeps the upstream scan parallel); the kernel re-sorts by vec_id, so
-    arrival order is irrelevant."""
-
-    def _train_kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True).sort_values("vec_id")
-        V = np.stack(pdf["v"].to_numpy())  # (n, D), ascending vec_id
-        nv = pdf["nv"].to_numpy().astype(np.float64)
-        ids = pdf["vec_id"].to_numpy()
-        n, D = V.shape
-        seed = ids < n_centroids
-        C = V[seed].copy()  # ascending cid (== vec_id order)
-        NC = nv[seed].copy()  # seed norms come from the input, as cb0's
-        CIDS = ids[seed]
-        K = len(CIDS)
-        if K == 0:
-            return
-        for _ in range(iters):
-            # Assignment: the ivf_assign kernel verbatim (dimension-
-            # major blocked accumulation, -inf for zero denominators,
-            # argmax first index = lowest cid).
-            best = np.empty(n, dtype=np.int64)
-            block = 2048
-            for lo in range(0, n, block):
-                hi = min(lo + block, n)
-                Vb = V[lo:hi]
-                acc = np.multiply.outer(Vb[:, 0], C[:, 0])
-                for d in range(1, D):
-                    acc = acc + np.multiply.outer(Vb[:, d], C[:, d])
-                den = np.multiply.outer(nv[lo:hi], NC)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cosc = np.where(den == 0.0, -np.inf, acc / den)
-                best[lo:hi] = np.argmax(cosc, axis=1)
-            # Means: per-dimension ordered left fold over members by
-            # ascending vec_id (rows are already in that order), then
-            # one IEEE division — the _ivf_lloyd_step aggregate
-            # verbatim. Empty clusters keep their previous centroid.
-            newC = C.copy()
-            for k in range(K):
-                members = np.flatnonzero(best == k)
-                if len(members) == 0:
-                    continue
-                acc = np.zeros(D)
-                for r in members:
-                    acc = acc + V[r]
-                newC[k] = acc / float(len(members))
-            C = newC
-            # nc = sqrt(dot(cv, cv)) — the left fold, recomputed for
-            # every row exactly like the step's trailing select.
-            acc = C[:, 0] * C[:, 0]
-            for d in range(1, D):
-                acc = acc + C[:, d] * C[:, d]
-            NC = np.sqrt(acc)
-        yield pd.DataFrame({"cid": CIDS, "cv": list(C), "nc": NC})
-
-    return train.repartition(1).mapInPandas(
-        _train_kernel, "cid bigint, cv array<double>, nc double"
+def _as_ivf(cb: DataFrame) -> DataFrame:
+    """A one-subspace (m, j, c) codebook as the coarse quantizer's
+    (cid, cv, nc), with nc = sqrt(dot(cv, cv)) as the oracle folds it."""
+    return cb.select(
+        F.col("j").alias("cid"), F.col("c").alias("cv"),
+        F.sqrt(dot("c", "c")).alias("nc"),
     )
 
 
-def _pq_train_fused(
-    tsub: DataFrame, n_centroids: int, iters: int
+def _lloyd_fused(
+    train: DataFrame, n_centroids: int, iters: int, cosine: bool
 ) -> DataFrame:
-    """Per-subspace Lloyd's over the bounded long-form (vec_id, m, x)
-    sample in one Arrow task — see _FUSED_TRAIN_MAX. Assignment is the
-    pq_encode kernel's d = xx - 2*xc + cc left-fold sequence; means are
-    the ordered member folds; ties and empty clusters behave exactly as
-    _pq_assign/_pq_lloyd_step."""
+    """``iters`` Lloyd steps over the bounded sample in one Arrow task —
+    see _FUSED_TRAIN_MAX. Same frames in and out as ``_lloyd_step``;
+    the cosine (IVF) sample is one subspace m = 0. Each subspace trains
+    ``fold.lloyd`` from its seeds vec_id < n_centroids. The sample
+    arrives via one tiny exchange (repartition(1) keeps the upstream
+    scan parallel); the kernel re-sorts by (m, vec_id), so arrival order
+    is irrelevant."""
+    if cosine:
+        train = train.select(
+            "vec_id", F.lit(0).alias("m"), F.col("v").alias("x")
+        )
 
     def _train_kernel(batches):
         import numpy as np
@@ -571,98 +481,88 @@ def _pq_train_fused(
         pdfs = [p for p in batches if len(p)]
         if not pdfs:
             return
-        pdf = pd.concat(pdfs, ignore_index=True).sort_values(
-            ["m", "vec_id"]
-        )
-        out_m: list = []
-        out_j: list = []
-        out_c: list = []
+        pdf = pd.concat(pdfs, ignore_index=True).sort_values(["m", "vec_id"])
+        out = []
         for m, g in pdf.groupby("m", sort=True):
-            X = np.stack(g["x"].to_numpy())  # (n_m, W), ascending vec_id
+            X = np.stack(g["x"].to_numpy())  # ascending vec_id
             ids = g["vec_id"].to_numpy()
-            n, W = X.shape
-            seed = ids < n_centroids
-            C = X[seed].copy()  # ascending j
-            JS = ids[seed]
-            K = len(JS)
-            if K == 0:
-                continue
-            for _ in range(iters):
-                xx = X[:, 0] * X[:, 0]
-                for i in range(1, W):
-                    xx = xx + X[:, i] * X[:, i]
-                dmat = np.empty((n, K))
-                for jj in range(K):
-                    xc = X[:, 0] * C[jj, 0]
-                    cc = C[jj, 0] * C[jj, 0]
-                    for i in range(1, W):
-                        xc = xc + X[:, i] * C[jj, i]
-                        cc = cc + C[jj, i] * C[jj, i]
-                    dmat[:, jj] = xx - 2.0 * xc + cc
-                best = np.argmin(dmat, axis=1)  # ties -> lowest j
-                newC = C.copy()
-                for k in range(K):
-                    members = np.flatnonzero(best == k)
-                    if len(members) == 0:
-                        continue
-                    acc = np.zeros(W)
-                    for r in members:
-                        acc = acc + X[r]
-                    newC[k] = acc / float(len(members))
-                C = newC
-            out_m.extend([int(m)] * K)
-            out_j.extend(int(j) for j in JS)
-            out_c.extend(list(C))
-        if out_m:
-            yield pd.DataFrame({"m": out_m, "j": out_j, "c": out_c})
+            seed = ids < n_centroids  # ascending j
+            if seed.any():
+                C = lloyd(X, X[seed], iters, cosine)
+                out.append(pd.DataFrame({"m": m, "j": ids[seed], "c": list(C)}))
+        if out:
+            yield pd.concat(out, ignore_index=True)
 
-    return tsub.repartition(1).mapInPandas(
+    cb = train.repartition(1).mapInPandas(
         _train_kernel, "m int, j bigint, c array<double>"
     )
+    return _as_ivf(cb) if cosine else cb
 
 
-def _ivf_lloyd_step(train: DataFrame, cb: DataFrame, dims: int = 64) -> DataFrame:
-    """One spherical-k-means Lloyd iteration over FULL vectors (the
-    coarse quantizer's training, round 9): assign each training vector
-    to its max-cosine centroid (ties -> lowest cid, NULL cosines last —
-    the identical ORDER BY on both engines), then recompute each
-    centroid as the per-dimension ORDERED fold mean over its members
-    (by vec_id) so Spark and DuckDB sum the identical sequence. Empty
-    clusters keep their previous centroid. One tiny shuffle per
-    iteration (|clusters| x dims groups); the sample is bounded, so
-    training cost is CONSTANT in corpus size.
-
-    The assignment leg rides the ivf_assign Arrow kernel (round 13):
-    the original crossJoin + window folded train_limit x K pairs
-    through the interpreted HOF dot — fine at fixed K=4, but ~35s of
-    ml23's 84s 100x wall once K auto-provisions to ~N/256. The kernel
-    computes the identical left-fold cosc, maps zero denominators to
-    -inf (== NULLS LAST under the old desc_nulls_last ORDER BY), and
-    breaks ties toward the lowest cid (argmax-first over the
-    cid-sorted axis) — assignments are bit-identical."""
-    asg = ivf_assign(train, cb).select("vec_id", "v", "cid")
-    grouped = asg.groupBy("cid").agg(
-        F.array_sort(F.collect_list(F.struct("vec_id", "v"))).alias("lst"),
+def _lloyd_step(
+    train: DataFrame, cb: DataFrame, cosine: bool = False
+) -> DataFrame:
+    """One Lloyd iteration as DataFrame ops: the path above
+    _FUSED_TRAIN_MAX, and the reference the fused kernel is tested
+    against. PQ (default): sample (vec_id, m, x) and codebook (m, j, c),
+    squared-L2 assignment by ``_pq_assign``. ``cosine``: the IVF coarse
+    quantizer as one subspace, sample (vec_id, v, nv) and codebook
+    (cid, cv, nc), spherical assignment by the ``ivf_assign`` Arrow
+    kernel (zero denominators last). Both break ties to the lowest
+    centroid id — the oracle's ORDER BY. Each centroid becomes the
+    per-dimension ORDERED fold mean over its members (by vec_id), so
+    Spark and DuckDB sum the identical sequence; the width is the
+    member vectors'. Empty clusters keep their previous centroid. One
+    tiny shuffle per iteration (|subspaces| x |centroids| groups); the
+    sample is bounded, so training cost is CONSTANT in corpus size."""
+    if cosine:
+        asg = ivf_assign(train, cb).select(
+            "vec_id", F.lit(0).alias("m"), F.col("v").alias("x"),
+            F.col("cid").alias("j"),
+        )
+        cb = cb.select(
+            F.lit(0).alias("m"), F.col("cid").alias("j"), F.col("cv").alias("c")
+        )
+    else:
+        asg = _pq_assign(train, cb)
+    grouped = asg.groupBy("m", "j").agg(
+        F.array_sort(F.collect_list(F.struct("vec_id", "x"))).alias("lst"),
         F.count(F.lit(1)).alias("n"),
     )
     newc = grouped.select(
-        "cid",
+        "m", "j",
         F.transform(
-            F.sequence(F.lit(1), F.lit(dims)),
-            lambda i: F.aggregate(
-                F.transform(F.col("lst"), lambda e: F.element_at(e["v"], i)),
+            F.col("lst")[0]["x"],
+            lambda _, i: F.aggregate(
+                F.transform("lst", lambda e: e["x"][i]),
                 F.lit(0.0),
                 lambda acc, val: acc + val,
             )
             / F.col("n"),
-        ).alias("cvnew"),
+        ).alias("cnew"),
     )
-    upd = cb.join(F.broadcast(newc), "cid", "left").select(
-        "cid", F.coalesce("cvnew", "cv").alias("cv")
+    upd = cb.join(F.broadcast(newc), ["m", "j"], "left").select(
+        "m", "j", F.coalesce("cnew", "c").alias("c")
     )
-    return upd.select(
-        "cid", "cv", F.sqrt(dot("cv", "cv")).alias("nc")
-    )
+    return _as_ivf(upd) if cosine else upd
+
+
+def _train_codebook(
+    train: DataFrame,
+    seed: DataFrame,
+    n_centroids: int,
+    iters: int,
+    train_limit: int,
+    cosine: bool,
+) -> DataFrame:
+    """Lloyd's k-means from ``seed`` over the bounded ``train`` sample
+    (frames as in ``_lloyd_step``): fused up to _FUSED_TRAIN_MAX sample
+    rows, one DataFrame step per iteration above it."""
+    if train_limit <= _FUSED_TRAIN_MAX:
+        return _lloyd_fused(train, n_centroids, iters, cosine)
+    for _ in range(iters):
+        seed = _lloyd_step(train, seed, cosine)
+    return seed
 
 
 def ivf_train_centroids(
@@ -671,10 +571,11 @@ def ivf_train_centroids(
     iters: int = 2,
     train_limit: int | None = None,
 ) -> DataFrame:
-    """Distributed spherical k-means for the IVF COARSE quantizer
-    (round 9; the fine/PQ analogue is ``pq_train_codebook``). Seed =
-    the ``n_centroids`` lowest vec_ids' vectors; training reads only
-    the ``train_limit`` lowest-id vectors (the bounded-sample recipe —
+    """Spherical k-means for the IVF COARSE quantizer (round 9): the
+    one-subspace, cosine-objective case of the PQ trainer
+    ``pq_train_codebook`` (both run ``_train_codebook``). Seed = the
+    ``n_centroids`` lowest vec_ids' vectors; training reads only the
+    ``train_limit`` lowest-id vectors (the bounded-sample recipe —
     codebooks need a multiple of n_centroids vectors, not the corpus).
     ``train_limit`` defaults to max(2048, 8 * n_centroids) (round 13):
     the old fixed 2048 silently starved auto-provisioned codebooks —
@@ -691,17 +592,13 @@ def ivf_train_centroids(
     train = emb.filter(F.col("vec_id") < train_limit).select(
         "vec_id", "v", "nv"
     )
-    if train_limit <= _FUSED_TRAIN_MAX:
-        # Bounded sample: one Arrow task computes every Lloyd step with
-        # the identical fold sequences — see _FUSED_TRAIN_MAX.
-        return _ivf_train_fused(train, n_centroids, iters)
-    cb = emb.filter(F.col("vec_id") < n_centroids).select(
+    seed = emb.filter(F.col("vec_id") < n_centroids).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cv"),
         F.col("nv").alias("nc"),
     )
-    for _ in range(iters):
-        cb = _ivf_lloyd_step(train, cb)
-    return cb
+    return _train_codebook(
+        train, seed, n_centroids, iters, train_limit, cosine=True
+    )
 
 
 # DuckDB mirror of ivf_train_centroids: the identical seed, assignment
@@ -1717,56 +1614,41 @@ def _pq_assign(sub: DataFrame, cb: DataFrame) -> DataFrame:
     )
 
 
-def pq_encode(emb: DataFrame, cb: DataFrame, n_sub: int = 16) -> DataFrame:
+def pq_encode(emb: DataFrame, cb: DataFrame) -> DataFrame:
     """Arrow-batched PQ corpus ENCODE: one map pass assigns every
     vector's subspace codes against the (collected, metadata-scale)
-    trained codebook. Same kernel recipe as ``ivf_assign`` —
-    dimension-sequential accumulation reproduces the JVM fold's add
-    sequence exactly (xx - 2*xc + cc per centroid, argmin ties to the
-    lowest j = numpy's first index), so codes are bit-identical to the
-    ``_pq_assign`` DataFrame path (pinned in pytest) at a fraction of
-    the interpreted-fold cost. Zero corpus shuffle: runs in the scan's
-    own partitions."""
+    trained codebook, whose centroids set the subspace width. Same
+    kernel recipe as ``ivf_assign``: ``fold.l2_distances`` reproduces
+    the JVM fold's add sequence exactly (xx - 2*xc + cc per centroid,
+    argmin ties to the lowest j = numpy's first index), so codes are
+    bit-identical to the ``_pq_assign`` DataFrame path (pinned in
+    pytest) at a fraction of the interpreted-fold cost. Zero corpus
+    shuffle: runs in the scan's own partitions."""
+    import numpy as np
+
     by_m: dict = {}
-    for r in cb.collect():
-        by_m.setdefault(int(r["m"]), []).append((int(r["j"]), list(r["c"])))
-    for m in by_m:
-        by_m[m].sort()
-    ms = sorted(by_m)
+    for r in sorted(cb.collect(), key=lambda r: (r["m"], r["j"])):
+        by_m.setdefault(int(r["m"]), []).append((r["j"], list(r["c"])))
+    cents = {
+        m: (np.array([j for j, _ in jc]), np.array([c for _, c in jc]))
+        for m, jc in by_m.items()
+    }
 
     def _enc(batches):
         import numpy as np
         import pandas as pd
 
-        cents = {
-            m: (
-                np.array([j for j, _ in by_m[m]]),
-                np.array([c for _, c in by_m[m]]),
-            )
-            for m in ms
-        }
         for pdf in batches:
             if not len(pdf):
                 continue
             V = np.stack(pdf["v"].to_numpy())
             vec_ids = pdf["vec_id"].to_numpy()
             frames = []
-            for m in ms:
-                js, Cm = cents[m]
-                K, W = Cm.shape
-                X = V[:, m * W:(m + 1) * W]
-                xx = X[:, 0] * X[:, 0]
-                for i in range(1, W):
-                    xx = xx + X[:, i] * X[:, i]        # left-fold order
-                d = np.empty((len(X), K))
-                for jj in range(K):
-                    xc = X[:, 0] * Cm[jj, 0]
-                    cc = Cm[jj, 0] * Cm[jj, 0]
-                    for i in range(1, W):
-                        xc = xc + X[:, i] * Cm[jj, i]
-                        cc = cc + Cm[jj, i] * Cm[jj, i]
-                    d[:, jj] = xx - 2.0 * xc + cc      # _pq_l2's op order
-                best = np.argmin(d, axis=1)            # ties -> lowest j
+            for m, (js, Cm) in cents.items():
+                W = Cm.shape[1]
+                best = np.argmin(
+                    l2_distances(V[:, m * W:(m + 1) * W], Cm), axis=1
+                )  # ties -> lowest j
                 frames.append(
                     pd.DataFrame(
                         {"vec_id": vec_ids, "m": m, "code": js[best]}
@@ -1779,63 +1661,94 @@ def pq_encode(emb: DataFrame, cb: DataFrame, n_sub: int = 16) -> DataFrame:
     )
 
 
-def _pq_lloyd_step(sub: DataFrame, cb: DataFrame, width: int = 4) -> DataFrame:
-    """One Lloyd iteration: assign, then per-(subspace, cluster, dim)
-    mean as an ORDERED fold over members (by vec_id) so both engines
-    sum the identical sequence. ONE tiny shuffle per iteration (the
-    (m, j) member roll-up — at most |subspaces| x |centroids| groups);
-    the updated codebook re-broadcasts. Empty clusters keep their
-    previous centroid (broadcast left join + coalesce)."""
-    asg = _pq_assign(sub, cb)
-    grouped = asg.groupBy("m", "j").agg(
-        F.array_sort(F.collect_list(F.struct("vec_id", "x"))).alias("lst"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    newc = grouped.select(
-        "m", "j",
-        F.transform(
-            F.sequence(F.lit(1), F.lit(width)),
-            lambda i: F.aggregate(
-                F.transform(F.col("lst"), lambda e: F.element_at(e["x"], i)),
-                F.lit(0.0),
-                lambda acc, val: acc + val,
-            )
-            / F.col("n"),
-        ).alias("cnew"),
-    )
-    return cb.join(F.broadcast(newc), ["m", "j"], "left").select(
-        "m", "j", F.coalesce("cnew", "c").alias("c")
-    )
-
-
 def pq_train_codebook(
     sub: DataFrame,
     n_centroids: int = 16,
     iters: int = 2,
     train_limit: int = 2048,
 ) -> DataFrame:
-    """Distributed k-means (Lloyd's) PQ codebook over long-form
-    subvectors: init = the ``n_centroids`` lowest vec_ids' subvectors
-    (the deterministic seed), then ``iters`` assign/mean rounds. Every
-    stage is DataFrame ops — broadcast-join assignment (map-side
-    min_by), one small shuffle per round for the means (|clusters| x
-    dims groups). Training reads only the ``train_limit`` lowest-id
-    vectors — the bounded-SAMPLE recipe that keeps training cost
-    CONSTANT in corpus size (codebooks need ~100-1000x n_centroids
-    vectors, not the corpus; round-8 measured 32x wall at 100x data
-    with full-corpus training). The full corpus is then encoded in one
-    Arrow pass (``pq_encode``)."""
+    """K-means (Lloyd's) PQ codebook over long-form subvectors, every
+    subspace trained separately by ``_train_codebook``: init = the
+    ``n_centroids`` lowest vec_ids' subvectors (the deterministic
+    seed), then ``iters`` assign/mean rounds with squared-L2
+    assignment and ordered-fold means. Training reads only the
+    ``train_limit`` lowest-id vectors — the bounded-SAMPLE recipe that
+    keeps training cost CONSTANT in corpus size (codebooks need
+    ~100-1000x n_centroids vectors, not the corpus; round-8 measured
+    32x wall at 100x data with full-corpus training). The full corpus
+    is then encoded in one Arrow pass (``pq_encode``)."""
     tsub = sub.filter(F.col("vec_id") < train_limit)
-    if train_limit <= _FUSED_TRAIN_MAX:
-        # Bounded sample: one Arrow task computes every Lloyd step with
-        # the identical fold sequences — see _FUSED_TRAIN_MAX.
-        return _pq_train_fused(tsub, n_centroids, iters)
-    cb = sub.filter(F.col("vec_id") < n_centroids).select(
+    seed = sub.filter(F.col("vec_id") < n_centroids).select(
         "m", F.col("vec_id").alias("j"), F.col("x").alias("c")
     )
-    for _ in range(iters):
-        cb = _pq_lloyd_step(tsub, cb)
-    return cb
+    return _train_codebook(
+        tsub, seed, n_centroids, iters, train_limit, cosine=False
+    )
+
+
+def _adc_table(sub: DataFrame, cb: DataFrame, n_queries: int) -> DataFrame:
+    """ADC lookup table of the tiny query set: (aq, am, j, dq), one
+    squared L2 per (query, subspace, centroid) — n_sub x n_centroids
+    rows per query."""
+    return (
+        sub.filter(F.col("vec_id") < n_queries)
+        .join(F.broadcast(cb), "m")
+        .select(
+            F.col("vec_id").alias("aq"), F.col("m").alias("am"), "j",
+            _pq_l2("x", "c").alias("dq"),
+        )
+    )
+
+
+def _adc_rerank(
+    lookups: DataFrame, emb: DataFrame, n_queries: int, shortlist: int
+) -> DataFrame:
+    """ADC ranking, then the exact re-rank of its shortlist. ``lookups``
+    has one (q_id, vec_id, m, dq) row per candidate and subspace; the
+    approximate distance is their ordered fold by m — the sequence
+    DuckDB folds, so bit-exact. Only the top-``shortlist`` by (approx,
+    vec_id) per query touch raw vectors (late materialization: the tiny
+    shortlist broadcasts against the corpus scan). Returns (q_id,
+    vec_id, approx, cos, v) with UNROUNDED doubles."""
+    appx = (
+        lookups.groupBy("q_id", "vec_id")
+        .agg(F.array_sort(F.collect_list(F.struct("m", "dq"))).alias("lst"))
+        .select("q_id", "vec_id", _ordered_fold("lst", "dq").alias("approx"))
+    )
+    w1 = Window.partitionBy("q_id").orderBy("approx", "vec_id")
+    short = (
+        appx.withColumn("rn", F.row_number().over(w1))
+        .filter(F.col("rn") <= shortlist)
+        .select("q_id", "vec_id", "approx")
+    )
+    cos = dot("qv", "v") / F.nullif(
+        F.sqrt(dot("qv", "qv")) * F.sqrt(dot("v", "v")),
+        F.lit(0.0),
+    )
+    base = emb.select("vec_id", "v")
+    qvec = base.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("qq_id"), F.col("v").alias("qv")
+    )
+    return (
+        F.broadcast(short)
+        .join(base, "vec_id")
+        .join(F.broadcast(qvec), F.col("q_id") == F.col("qq_id"))
+        .select("q_id", "vec_id", "approx", cos.alias("cos"), "v")
+    )
+
+
+def _adc_topk(rer: DataFrame, k: int) -> DataFrame:
+    """The top-``k`` of an ADC re-rank by (cos DESC, vec_id), rounded."""
+    w2 = Window.partitionBy("q_id").orderBy(F.desc("cos"), "vec_id")
+    return (
+        rer.withColumn("rn", F.row_number().over(w2))
+        .filter(F.col("rn") <= k)
+        .select(
+            "q_id", "vec_id",
+            r6("approx").alias("approx_l2"),
+            r6("cos").alias("cosine"),
+        )
+    )
 
 
 @register(
@@ -1895,59 +1808,17 @@ def sim06_pq_ann_topk(
     ).localCheckpoint(eager=False)
 
     # Encode the corpus: one Arrow map pass (zero shuffle).
-    codes = pq_encode(emb, cb, n_sub)
-    # ADC tables for the tiny query set (n_sub x n_centroids per query).
-    adc = (
-        sub.filter(F.col("vec_id") < n_queries)
-        .join(F.broadcast(cb), "m")
-        .select(
-            F.col("vec_id").alias("q_id"), F.col("m").alias("am"), "j",
-            _pq_l2("x", "c").alias("dq"),
-        )
-    )
-    # approx = ordered fold of the per-subspace lookups (by m) — the
-    # same sequence DuckDB folds, so bit-exact.
-    appx = (
+    codes = pq_encode(emb, cb)
+    adc = _adc_table(sub, cb, n_queries)
+    lookups = (
         codes.join(
             F.broadcast(adc),
             (F.col("m") == F.col("am")) & (F.col("code") == F.col("j")),
         )
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", "vec_id")
-        .agg(F.array_sort(F.collect_list(F.struct("m", "dq"))).alias("lst"))
-        .select("q_id", "vec_id", _ordered_fold("lst", "dq").alias("approx"))
+        .filter(F.col("vec_id") != F.col("aq"))
+        .select(F.col("aq").alias("q_id"), "vec_id", "m", "dq")
     )
-    w1 = Window.partitionBy("q_id").orderBy("approx", "vec_id")
-    short = (
-        appx.withColumn("rn", F.row_number().over(w1))
-        .filter(F.col("rn") <= shortlist)
-        .select("q_id", "vec_id", "approx")
-    )
-    # Exact re-rank: only now touch raw vectors — the tiny shortlist
-    # broadcasts against the corpus scan.
-    cos = dot("qv", "v") / F.nullif(
-        F.sqrt(dot("qv", "qv")) * F.sqrt(dot("v", "v")),
-        F.lit(0.0),
-    )
-    qvec = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("qq_id"), F.col("v").alias("qv")
-    )
-    rer = (
-        F.broadcast(short)
-        .join(emb.select("vec_id", "v"), "vec_id")
-        .join(F.broadcast(qvec), F.col("q_id") == F.col("qq_id"))
-        .select("q_id", "vec_id", "approx", cos.alias("cos"))
-    )
-    w2 = Window.partitionBy("q_id").orderBy(F.desc("cos"), "vec_id")
-    return (
-        rer.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= k)
-        .select(
-            "q_id", "vec_id",
-            r6("approx").alias("approx_l2"),
-            r6("cos").alias("cosine"),
-        )
-    )
+    return _adc_topk(_adc_rerank(lookups, emb, n_queries, shortlist), k)
 
 
 @register(
@@ -2125,16 +1996,7 @@ def sim08_ivfadc_topk(
         shortlist=shortlist, n_queries=n_queries,
         cent_path=cent_path, cb_path=cb_path,
     )
-    w2 = Window.partitionBy("q_id").orderBy(F.desc("cos"), "vec_id")
-    return (
-        rer.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= k)
-        .select(
-            "q_id", "vec_id",
-            r6("approx").alias("approx_l2"),
-            r6("cos").alias("cosine"),
-        )
-    )
+    return _adc_topk(rer, k)
 
 
 def _ivfadc_rerank(
@@ -2194,16 +2056,9 @@ def _ivfadc_rerank(
         cb = pq_train_codebook(
             sub, n_centroids=n_centroids, iters=iters
         ).localCheckpoint(eager=False)
-    codes = pq_encode(_emb(spark, sf_dir), cb, n_sub)
-    adc = (
-        sub.filter(F.col("vec_id") < n_queries)
-        .join(F.broadcast(cb), "m")
-        .select(
-            F.col("vec_id").alias("aq"), F.col("m").alias("am"), "j",
-            _pq_l2("x", "c").alias("dq"),
-        )
-    )
-    appx = (
+    codes = pq_encode(_emb(spark, sf_dir), cb)
+    adc = _adc_table(sub, cb, n_queries)
+    lookups = (
         F.broadcast(candp)
         .join(codes, "vec_id")
         .join(
@@ -2212,36 +2067,11 @@ def _ivfadc_rerank(
             & (F.col("code") == F.col("j"))
             & (F.col("q_id") == F.col("aq")),
         )
-        .groupBy("q_id", "vec_id")
-        .agg(F.array_sort(F.collect_list(F.struct("m", "dq"))).alias("lst"))
-        .select(
-            "q_id", "vec_id", _ordered_fold("lst", "dq").alias("approx")
-        )
-    )
-    w1 = Window.partitionBy("q_id").orderBy("approx", "vec_id")
-    short = (
-        appx.withColumn("rn", F.row_number().over(w1))
-        .filter(F.col("rn") <= shortlist)
-        .select("q_id", "vec_id", "approx")
-    )
-    # Exact re-rank: late materialization — only the shortlist touches
-    # raw vectors.
-    cos = dot("qv", "v") / F.nullif(
-        F.sqrt(dot("qv", "qv")) * F.sqrt(dot("v", "v")),
-        F.lit(0.0),
-    )
-    base = _emb(spark, sf_dir).select("vec_id", "v")
-    qvec = base.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("qq_id"), F.col("v").alias("qv")
+        .select("q_id", "vec_id", "m", "dq")
     )
     # "v" (the candidate's raw vector) rides along so sim11's MMR stage
     # can compute pairwise cosines without a second corpus scan.
-    return (
-        F.broadcast(short)
-        .join(base, "vec_id")
-        .join(F.broadcast(qvec), F.col("q_id") == F.col("qq_id"))
-        .select("q_id", "vec_id", "approx", cos.alias("cos"), "v")
-    )
+    return _adc_rerank(lookups, _emb(spark, sf_dir), n_queries, shortlist)
 
 
 _SIM08_ORACLE_PREFIX_MARKER = True  # (sim09 composes sim08's chain below)
@@ -2523,11 +2353,10 @@ def mmr_rerank(
     # query BY CONTRACT (sim10 caps at top-``shortlist``; sim11's
     # IVFADC shortlist likewise), so the pairwise cosines fit in one
     # Arrow group trivially (shortlist^2 <= 10^4 doubles): group ONCE
-    # on q_id and compute the pair matrix INSIDE the kernel with the
-    # dimension-major left-fold accumulation (the ivf_assign recipe) —
-    # G folds sum_d v_a[d]*v_b[d] in ascending d, the exact add
-    # sequence of the JVM/DuckDB list_dot_product, so every s_ab (and
-    # therefore every MMR score) is bit-identical to the joined form.
+    # on q_id and compute the pair matrix INSIDE the kernel with
+    # fold.cosine_scores — the add sequence of the JVM/DuckDB
+    # list_dot_product, so every s_ab (and therefore every MMR score)
+    # is bit-identical to the joined form.
     # One q_id exchange total; the degenerate single-candidate query
     # needs no LEFT-join special case (the kernel sees its row).
 
@@ -2540,16 +2369,8 @@ def mmr_rerank(
         ids = [int(x) for x in pdf["vec_id"]]
         rel_by = dict(zip(ids, (float(x) for x in pdf["rel"])))
         V = np.stack(pdf["v"].to_numpy())          # (n, D)
-        n, D = V.shape
-        # dimension-major left-fold Gram — see ivf_assign. The diagonal
-        # is the same fold of dot(v, v) the JVM norm uses.
-        G = np.multiply.outer(V[:, 0], V[:, 0])
-        for d in range(1, D):
-            G = G + np.multiply.outer(V[:, d], V[:, d])
-        nv = np.sqrt(G.diagonal())
-        den = np.multiply.outer(nv, nv)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            S = np.where(den == 0.0, np.nan, G / den)
+        nv = np.sqrt(fold_self(V))
+        S = cosine_scores(V, V, nv, nv, np.nan)
         pos = {d: i for i, d in enumerate(ids)}
         out = []
         # Step 1: pure relevance (ties -> lowest id via ascending scan
@@ -2863,8 +2684,8 @@ def sim13_knn_graph(
     # shuffle and scored each with the interpreted fold (~71 s at
     # 100x); the kernel shuffles the corpus ONCE on the bucket key and
     # ranks inside numpy. Bit-exactness is the d17 argument verbatim:
-    # cosines accumulate dimension-sequentially (the fold's summation
-    # order), sqrt/divide are correctly rounded everywhere, ranking is
+    # cosines are fold.cosine_scores (the fold's summation order),
+    # sqrt/divide are correctly rounded everywhere, ranking is
     # a stable argsort over ids sorted ascending == the oracle's
     # (cos DESC NULLS LAST, nbr_id) order, and the emitted (rank,
     # nbr_id) are integers. Buckets are ~256 vectors by construction;
@@ -2883,27 +2704,19 @@ def sim13_knn_graph(
             )
         V = np.stack(vals)
         ids = pdf["vec_id"].to_numpy()
-        n, D = V.shape
+        n = len(V)
         if n > 16384:
             raise ValueError(
                 f"sim13_knn_graph: bucket of {n} vectors exceeds the "
                 "16384 pairwise bound; raise bits (buckets scale as "
                 "~N/256) so in-bucket ranking stays memory-sized"
             )
-        acc = np.zeros(n)
-        for d in range(D):
-            acc = acc + V[:, d] * V[:, d]
-        nv = np.sqrt(acc)
+        nv = np.sqrt(fold_self(V))
         out_id, out_rank, out_nbr, out_cos = [], [], [], []
         block = 1024
         for lo in range(0, n, block):
             hi = min(lo + block, n)
-            G = np.outer(V[lo:hi, 0], V[:, 0])
-            for d in range(1, D):
-                G = G + np.outer(V[lo:hi, d], V[:, d])
-            den = np.outer(nv[lo:hi], nv)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(den == 0.0, np.nan, G / den)
+            cos = cosine_scores(V[lo:hi], V, nv[lo:hi], nv, np.nan)
             for r in range(lo, hi):
                 c = cos[r - lo]
                 key = np.where(np.isnan(c), -np.inf, c)

@@ -859,8 +859,10 @@ class AcidTable:
         the new way, and every reader sees the union — exactly the
         Iceberg evolution contract. ``history()`` shows the spec per
         commit for audit."""
-        latest = self.latest_version()
         clustered = df.repartition(*[F.col(c) for c in partition_cols])
+        # Written once: a lost race only moved the log, so every retry
+        # commits these same files (as _commit_loop does).
+        new_files = self._write_data(clustered)
         for _ in range(max_retries):
             latest = self.latest_version()
             base = -1 if latest is None else latest
@@ -868,7 +870,6 @@ class AcidTable:
                 [] if latest is None else list(self._manifest(latest)["files"])
             )
             schema_ddl = self._evolved_schema_ddl(clustered, latest)
-            new_files = self._write_data(clustered)
             try:
                 self._try_commit(
                     base + 1, "append", files + new_files, schema_ddl,

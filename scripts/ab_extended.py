@@ -6,7 +6,7 @@ their source was untouched — the headline-only A/B proved ~1.4x
 environmental drift but did not cover the extended tier. This script is
 the same controlling experiment extended there: whole-process runs of
 engine A (a git worktree pinned at a prior commit) and engine B (HEAD)
-STRICTLY INTERLEAVED (A,B,A,B,...) on the same machine in the same hour,
+STRICTLY INTERLEAVED (A,B,B,A,A,B,...) on the same machine in the same hour,
 so machine-state drift hits both engines equally and only a genuine code
 regression can separate them.
 
@@ -105,7 +105,11 @@ def main() -> None:
 
     per_engine: dict[str, list[dict]] = {e: [] for e in args.engines}
     for rnd in range(args.rounds):
-        for engine in args.engines:  # strict interleave
+        # Strict interleave, alternating which engine runs first, so
+        # neither takes every first slot after an idle spell (on a
+        # shared host that slot can run faster).
+        order = args.engines if rnd % 2 == 0 else args.engines[::-1]
+        for engine in order:
             res = run_engine(engine, args.queries, args.sf_dir, args.runs)
             per_engine[engine].append(res)
             print(f"round {rnd + 1} {engine}: {json.dumps(res)}", flush=True)
@@ -122,8 +126,9 @@ def main() -> None:
             "best_total": round(sum(mins.values()), 3),
         }
     record = {
-        "method": "interleaved whole-process A/B, best-of-rounds of "
-        "best-of-runs, same machine same hour",
+        "method": "interleaved whole-process A/B, alternating which "
+        "engine runs first, best-of-rounds of best-of-runs, same machine "
+        "same hour",
         "sf_dir": args.sf_dir,
         "rounds": args.rounds,
         "runs_per_process": args.runs,

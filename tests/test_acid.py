@@ -845,6 +845,32 @@ def test_partition_evolution_appends_never_rewrite(spark, orders, root):
     assert t.read().filter(F.col("o_orderstatus").isNull()).count() == 0
 
 
+def test_append_partitioned_lost_race_reuses_written_files(spark, orders, root):
+    # A lost commit race only moves the log: the retry must commit the
+    # batch files already written, not write the batch again (which
+    # left the loser's copy under data/ as orphans until vacuum).
+    t = AcidTable(spark, root)
+    commit = t._try_commit
+    calls = {"n": 0}
+
+    def lose_first(*args, **kwargs):
+        calls["n"] += 1
+        if calls["n"] == 1:
+            raise CommitConflict("rival won")
+        return commit(*args, **kwargs)
+
+    t._try_commit = lose_first
+    batch = orders.filter(F.col("o_orderkey") % 3 == 0)
+    assert t.append_partitioned(batch, ["o_orderstatus"]) == 0
+    assert calls["n"] == 2
+    writes = [
+        w for w in os.listdir(os.path.join(root, "data")) if w.startswith("w-")
+    ]
+    assert len(writes) == 1, writes
+    assert t.read().exceptAll(batch).count() == 0
+    assert batch.exceptAll(t.read()).count() == 0
+
+
 def test_manifest_stats_prune_band_probe(spark, sf_dir, root):
     # ZORDER commits per-file min/max stats; a band probe then prunes
     # from the MANIFEST alone (no data I/O) and the pruned read equals

@@ -783,35 +783,52 @@ def test_load_table_rejects_conflicting_explicit_conf(spark, sf_dir):
 
 
 def test_python_workers_import_package_from_any_cwd(sf_dir, tmp_path):
-    # st17's applyInPandasWithState kernel is unpickled on Python
-    # workers by module path. The driver here has the package only on
-    # its sys.path and runs from a cwd outside the repo, so the workers
-    # must get the package from the session, not from their cwd.
+    # Python workers unpickle the query kernels. The driver here has the
+    # package only on its sys.path and runs from a cwd outside the repo.
+    # st17's applyInPandasWithState kernel is unpickled by module path,
+    # so under get_spark the workers must get the package from the
+    # session, not from their cwd. A bare session gives the workers no
+    # path at all, so sim06's and ml18's Arrow kernels must carry the
+    # fold helpers they call with them (pickled by value).
     import subprocess
     import sys
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    code = (
-        "import sys\n"
-        f"sys.path.insert(0, {repo!r})\n"
-        "from equity_volatility_lakehouse_platform_spark.session import get_spark\n"
-        "from equity_volatility_lakehouse_platform_spark.plans.streaming_plans "
-        "import st17_stateful_timeout_sessions\n"
-        "spark = get_spark(app_name='evlp-cwd', cpus=2, shuffle_partitions=2)\n"
-        f"print('rows', st17_stateful_timeout_sessions(spark, {sf_dir!r}).count())\n"
-        "spark.stop()\n"
-    )
+    plans = "equity_volatility_lakehouse_platform_spark.plans"
+    inputs = [
+        (
+            "from equity_volatility_lakehouse_platform_spark.session import get_spark\n"
+            "spark = get_spark(app_name='evlp-cwd', cpus=2, shuffle_partitions=2)\n",
+            [("streaming_plans", "st17_stateful_timeout_sessions")],
+        ),
+        (
+            "from pyspark.sql import SparkSession\n"
+            "spark = SparkSession.builder.master('local[2]').getOrCreate()\n",
+            [
+                ("similarity", "sim06_pq_ann_topk"),
+                ("mlprep_plans", "ml18_random_projection"),
+            ],
+        ),
+    ]
     env = dict(os.environ, SPARK_DRIVER_MEMORY="1g")
     env["PYTHONPATH"] = os.pathsep.join(
         p for p in env.get("PYTHONPATH", "").split(os.pathsep)
         if p and os.path.abspath(p) != repo
     )
-    proc = subprocess.run(
-        [sys.executable, "-c", code], cwd=tmp_path, env=env,
-        capture_output=True, text=True, timeout=900,
-    )
-    assert proc.returncode == 0, proc.stderr[-4000:]
-    assert "rows " in proc.stdout
+    for session, queries in inputs:
+        code = f"import sys\nsys.path.insert(0, {repo!r})\n" + session
+        for module, name in queries:
+            code += (
+                f"from {plans}.{module} import {name}\n"
+                f"print('rows', len({name}(spark, {sf_dir!r}).collect()))\n"
+            )
+        code += "spark.stop()\n"
+        proc = subprocess.run(
+            [sys.executable, "-c", code], cwd=tmp_path, env=env,
+            capture_output=True, text=True, timeout=900,
+        )
+        assert proc.returncode == 0, proc.stderr[-4000:]
+        assert proc.stdout.count("rows ") == len(queries)
 
 
 def test_curation_dag_edge_corpora(spark, tmp_path):

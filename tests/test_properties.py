@@ -890,34 +890,61 @@ def test_ivf_assign_arrow_scorer_bit_exact(spark, sf_dir):
     # Round-8: the mapInPandas coarse scorer's dimension-sequential
     # accumulation must reproduce the JVM fold BIT-exactly — same
     # argmax, same tie-breaks — against the pure-DataFrame reference
-    # (crossJoin + max_by over the same cosc expression).
+    # (crossJoin + max_by over the same cosc expression). Its top-n
+    # path (ivf_probe_topn) must equal the crossJoin + row_number
+    # probe (ivf_probe). The second centroid set holds vector 17 twice
+    # (cids 4 and 9) next to query 0's own vector (cid 1), so both
+    # paths must break the tie to the lowest cid, for query 0 right at
+    # the nprobe = 2 cut.
     from equity_volatility_lakehouse_platform_spark.plans.similarity import (
         _ivf_emb,
         dot,
         ivf_assign,
+        ivf_probe,
+        ivf_probe_topn,
     )
 
     emb = _ivf_emb(spark, sf_dir)
-    cent = emb.filter(F.col("vec_id").isin(5, 17, 29, 41)).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv"),
-        F.col("nv").alias("nc"),
-    )
-    got = {
-        r["vec_id"]: r["cid"]
-        for r in ivf_assign(emb, cent).select("vec_id", "cid").collect()
-    }
-    cosc = dot(F.col("v"), F.col("cv")) / F.nullif(
-        F.col("nv") * F.col("nc"), F.lit(0.0)
-    )
-    want = {
-        r["vec_id"]: r["cid"]
-        for r in emb.crossJoin(F.broadcast(cent))
-        .select("vec_id", "cid", cosc.alias("cosc"))
-        .groupBy("vec_id")
-        .agg(F.max_by("cid", F.struct(F.col("cosc"), -F.col("cid"))).alias("cid"))
-        .collect()
-    }
-    assert got == want
+
+    def centroids(cid_of_vec):
+        return spark.createDataFrame(
+            [(v, c) for v, c in cid_of_vec], "vec_id long, cid long"
+        ).join(emb, "vec_id").select(
+            "cid", F.col("v").alias("cv"), F.col("nv").alias("nc")
+        )
+
+    for cent in (
+        centroids([(5, 5), (17, 17), (29, 29), (41, 41)]),
+        centroids([(0, 1), (17, 4), (17, 9)]),
+    ):
+        got = {
+            r["vec_id"]: r["cid"]
+            for r in ivf_assign(emb, cent).select("vec_id", "cid").collect()
+        }
+        cosc = dot(F.col("v"), F.col("cv")) / F.nullif(
+            F.col("nv") * F.col("nc"), F.lit(0.0)
+        )
+        want = {
+            r["vec_id"]: r["cid"]
+            for r in emb.crossJoin(F.broadcast(cent))
+            .select("vec_id", "cid", cosc.alias("cosc"))
+            .groupBy("vec_id")
+            .agg(F.max_by("cid", F.struct(F.col("cosc"), -F.col("cid"))).alias("cid"))
+            .collect()
+        }
+        assert got == want
+
+        got_probe = sorted(
+            (r["q_id"], r["qcid"])
+            for r in ivf_probe_topn(
+                emb.filter(F.col("vec_id") < 3), cent, 2
+            ).collect()
+        )
+        want_probe = sorted(
+            (r["q_id"], r["qcid"])
+            for r in ivf_probe(emb, cent, 2, n_queries=3).collect()
+        )
+        assert got_probe == want_probe
 
 
 def test_pq_lloyd_step_keeps_empty_clusters_and_is_deterministic(spark):
@@ -925,7 +952,7 @@ def test_pq_lloyd_step_keeps_empty_clusters_and_is_deterministic(spark):
     # must RETAIN those clusters' previous centroids (coalesce path),
     # and the ordered-fold means must be rerun-identical.
     from equity_volatility_lakehouse_platform_spark.plans.similarity import (
-        _pq_lloyd_step,
+        _lloyd_step,
         _pq_subspaces,
         pq_train_codebook,
     )
@@ -942,7 +969,7 @@ def test_pq_lloyd_step_keeps_empty_clusters_and_is_deterministic(spark):
     cb0 = sub.filter(F.col("vec_id") < 4).select(
         "m", F.col("vec_id").alias("j"), F.col("x").alias("c")
     )
-    cb1 = _pq_lloyd_step(sub, cb0)
+    cb1 = _lloyd_step(sub, cb0)
     assert cb1.count() == 16 * 4  # no cluster row lost
     # member-less clusters keep their EXACT previous centroid
     prev = {(r["m"], r["j"]): r["c"] for r in cb0.collect()}
@@ -978,7 +1005,7 @@ def test_pq_encode_arrow_matches_dataframe_path(spark, sf_dir):
     )
     got = {
         (r["vec_id"], r["m"]): r["code"]
-        for r in pq_encode(emb, cb, 16).collect()
+        for r in pq_encode(emb, cb).collect()
     }
     want = {
         (r["vec_id"], r["m"]): r["j"]
@@ -1223,8 +1250,8 @@ def test_delta_export_matches_acid_for_any_history(
 
 def test_fused_trainers_match_distributed_path(spark, sf_dir):
     # Round 14 (optimization round): bounded-sample training runs FUSED
-    # in one Arrow task (_ivf_train_fused/_pq_train_fused) below
-    # _FUSED_TRAIN_MAX. The fused kernels must reproduce the
+    # in one Arrow task (_lloyd_fused) below
+    # _FUSED_TRAIN_MAX. The fused kernel must reproduce the
     # distributed per-step path BIT-exactly — same assignment folds,
     # same ordered member means, same empty-cluster retention, same
     # seed norms — for both trainer families.
@@ -1232,8 +1259,7 @@ def test_fused_trainers_match_distributed_path(spark, sf_dir):
 
     from equity_volatility_lakehouse_platform_spark.plans.similarity import (
         _ivf_emb,
-        _ivf_lloyd_step,
-        _pq_lloyd_step,
+        _lloyd_step,
         _pq_subspaces,
         _emb,
         ivf_train_centroids,
@@ -1248,7 +1274,7 @@ def test_fused_trainers_match_distributed_path(spark, sf_dir):
     )
     train = emb.filter(F.col("vec_id") < 2048).select("vec_id", "v", "nv")
     for _ in range(2):
-        cb_old = _ivf_lloyd_step(train, cb_old)
+        cb_old = _lloyd_step(train, cb_old, cosine=True)
     old = {
         int(r["cid"]): (list(r["cv"]), float(r["nc"]))
         for r in cb_old.collect()
@@ -1267,7 +1293,7 @@ def test_fused_trainers_match_distributed_path(spark, sf_dir):
     )
     tsub = sub.filter(F.col("vec_id") < 2048)
     for _ in range(2):
-        cb_o = _pq_lloyd_step(tsub, cb_o)
+        cb_o = _lloyd_step(tsub, cb_o)
     old_pq = {
         (int(r["m"]), int(r["j"])): list(r["c"]) for r in cb_o.collect()
     }
