@@ -20,15 +20,19 @@ Layout::
   version and read exactly those files — data written by in-flight or
   crashed jobs is invisible (snapshot isolation; a crash mid-write
   leaves only an unreferenced ``data/w-*`` dir).
-* Publishing a commit is atomic create-if-absent: the manifest is fully
-  written + fsynced to a temp name, then ``os.link``-ed to
-  ``_commits/N.json`` — hardlink creation fails if N already exists, so
-  exactly one writer wins each version (the rename-based equivalent of
-  Delta's LogStore ``putIfAbsent``; on an object store this maps to a
-  conditional PUT).
-* Losers of the race retry OPTIMISTICALLY: re-read the new snapshot,
-  recompute their change, attempt version N+1. Orphaned data dirs from
-  lost races stay unreferenced until ``vacuum()``.
+* Publishing a commit is atomic create-if-absent (``put_if_absent``):
+  the manifest is fully written + fsynced to a temp name, then
+  ``os.link``-ed to ``_commits/N.json`` — hardlink creation fails if N
+  already exists, so exactly one writer wins each version (the
+  rename-based equivalent of Delta's LogStore ``putIfAbsent``; on an
+  object store this maps to a conditional PUT). ``delta_compat``
+  publishes its ``_delta_log`` entries through the same function.
+* Every writer is one OPTIMISTIC transaction (``_transact``): plan the
+  change against the latest snapshot, publish version N+1, and on a
+  lost race plan again against the winner's snapshot. Files written
+  before the loop (a blind batch) are reused by every attempt; files a
+  losing attempt derived from its snapshot are unlinked at once. Only a
+  crash leaves unreferenced data dirs, until ``vacuum()``.
 * DML is COPY-ON-WRITE at file granularity (``delete_where`` /
   ``update_where``): only files containing matching rows are rewritten;
   everything else carries into the new manifest by reference — the
@@ -37,10 +41,11 @@ Layout::
 Only table METADATA passes through the driver (file lists; O(files) like
 every table format) — data itself moves executor-side via ordinary
 parquet jobs, so the protocol adds no data-path driver work at 100 TB.
-The file-list read (``spark.read.parquet(*files)``) keeps predicate
-pushdown and column pruning intact; at real scale the manifest would
-also carry per-file min/max stats for file skipping (noted, not needed
-at test SF).
+The file-list read (``_scan``: explicit schema, explicit files) keeps
+predicate pushdown and column pruning intact. ``optimize_zorder``
+commits per-file min/max stats on its columns, so ``prune_files`` /
+``read_range`` skip files from the manifest alone; files committed
+without stats are never skipped.
 """
 
 from __future__ import annotations
@@ -67,6 +72,135 @@ def _stat_value(v):
         return v
     iso = getattr(v, "isoformat", None)
     return iso() if iso else str(v)
+
+
+def _ddl(df: DataFrame) -> str:
+    """A frame's schema in the manifest's DDL form (``struct<...>`` stripped)."""
+    return df.schema.simpleString()[7:-1]
+
+
+def _files(manifest: dict | None) -> list[str]:
+    """The live files of a snapshot; none before the first commit."""
+    return [] if manifest is None else manifest["files"]
+
+
+def _local_path(uri: str) -> str:
+    """Absolute local path of an ``input_file_name`` URI."""
+    return os.path.abspath(
+        urllib.parse.unquote(urllib.parse.urlparse(uri).path)
+    )
+
+
+def put_if_absent(path: str, text: str) -> bool:
+    """Publish ``text`` at ``path`` unless something is already there:
+    write and fsync a temp file, then hardlink it into place. POSIX
+    link(2) fails on an existing target, so of many concurrent
+    publishers of one path exactly one wins, and no reader ever sees a
+    partial file. Returns False when the path was taken; each caller
+    maps that to its own conflict error."""
+    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w") as fh:
+        fh.write(text)
+        fh.flush()
+        os.fsync(fh.fileno())
+    try:
+        os.link(tmp, path)
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+    return True
+
+
+def _zordered(
+    df: DataFrame, cols: list[str], target_files: int, bits: int
+) -> DataFrame:
+    """``df`` laid out in ``target_files`` files along the Morton z-key
+    of ``cols`` (see ``AcidTable.optimize_zorder``)."""
+    out_cols = list(df.columns)
+    fractions = [i / (1 << bits) for i in range(1, 1 << bits)]
+    # ONE aggregate computes every column's boundary array (round 14,
+    # optimization round — previously one agg job per column), and the
+    # per-row ranks run vectorized in a single Arrow pass:
+    # np.searchsorted(bounds, value, side="left") counts boundaries
+    # strictly below the value — integer-identical to the replaced
+    # interpreted aggregate fold acc + (value > b) over the sorted
+    # boundary array (Spark's NaN-greatest double ordering included:
+    # NaN ranks past every boundary on both paths). The fold ran
+    # INTERPRETED over (2^bits - 1) elements per column per row, and
+    # repartitionByRange evaluates its input twice (range sampling +
+    # the write), which measured ~6 s of snk10's zorder at sf0.1.
+    # Z-order columns are expected non-null (they must be orderable
+    # by percentile); NULLs in float columns are indistinguishable
+    # from NaN post-Arrow and would rank high where the old fold
+    # ranked them 0.
+    # Timestamp columns rank through unix_micros — a strictly
+    # monotone bijection, so the quantile sketch selects the same
+    # boundary elements and every per-row rank is unchanged — and
+    # only PRIMITIVE types cross the Arrow boundary.
+    def _zval(c: str) -> Column:
+        if isinstance(df.schema[c].dataType, T.TimestampType):
+            return F.unix_micros(F.col(c))
+        return F.col(c)
+
+    for ci, c in enumerate(cols):
+        df = df.withColumn(f"_v{ci}", _zval(c))
+    bnd = df.agg(
+        *[
+            F.percentile_approx(f"_v{ci}", fractions, 10_000).alias(
+                f"_b{ci}"
+            )
+            for ci in range(len(cols))
+        ]
+    )
+    df = df.crossJoin(F.broadcast(bnd))
+    base_fields = [
+        f
+        for f in df.schema.fields
+        if not (f.name.startswith("_b") or f.name.startswith("_v"))
+    ]
+    rank_schema = T.StructType(
+        base_fields
+        + [T.StructField(f"_r{ci}", T.IntegerType()) for ci in range(len(cols))]
+    )
+    keep = [f.name for f in rank_schema.fields]
+    n_zcols = len(cols)
+
+    def _ranks(batches):
+        import numpy as np
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ranks = {}
+            for ci in range(n_zcols):
+                v = pdf[f"_v{ci}"].to_numpy()
+                ba = np.asarray(pdf[f"_b{ci}"].iloc[0], dtype=v.dtype)
+                ranks[f"_r{ci}"] = np.searchsorted(
+                    ba, v, side="left"
+                ).astype("int32")
+            yield pdf[[c for c in keep if c in pdf.columns]].assign(**ranks)
+
+    df = df.mapInPandas(_ranks, rank_schema)
+    z = F.lit(0).cast("long")
+    for i in range(bits):
+        for ci in range(len(cols)):
+            bit = F.shiftright(F.col(f"_r{ci}"), i).bitwiseAND(F.lit(1))
+            z = z.bitwiseOR(
+                F.shiftleft(bit.cast("long"), i * len(cols) + ci)
+            )
+    # Lazily checkpoint the z-keyed frame: repartitionByRange
+    # executes its input TWICE (range-boundary sampling + the real
+    # pass), and without the lineage cut that meant two full table
+    # scans and two Arrow rank passes per rewrite. The materialized
+    # frame is the same rows the rewrite is about to shuffle anyway.
+    return (
+        df.withColumn("_z", z)
+        .localCheckpoint(eager=False)
+        .repartitionByRange(target_files, "_z")
+        .sortWithinPartitions("_z")
+        .select(*out_cols)
+    )
 
 
 class CommitConflict(RuntimeError):
@@ -111,6 +245,15 @@ class AcidTable:
         with open(self._commit_path(version)) as fh:
             return json.load(fh)
 
+    def _snapshot(self, version: int | None = None) -> tuple[int, dict]:
+        """(version, manifest) of ``version``, the latest by default.
+        Raises FileNotFoundError while the log is empty."""
+        latest = self.latest_version()
+        if latest is None:
+            raise FileNotFoundError(f"no committed version in {self.root}")
+        version = latest if version is None else version
+        return version, self._manifest(version)
+
     def history(self) -> list[dict]:
         """All committed manifests, oldest first (op metadata audit)."""
         latest = self.latest_version()
@@ -139,19 +282,54 @@ class AcidTable:
             manifest["spec"] = spec
         if stats is not None:
             manifest["stats"] = stats
-        tmp = self._commit_path(version) + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        try:
-            # Hardlink = atomic create-if-absent: exactly one writer can
-            # publish each version (POSIX link(2) fails on existing dst).
-            os.link(tmp, self._commit_path(version))
-        except FileExistsError as ex:
-            raise CommitConflict(f"version {version} already committed") from ex
-        finally:
-            os.unlink(tmp)
+        if not put_if_absent(self._commit_path(version), json.dumps(manifest)):
+            raise CommitConflict(f"version {version} already committed")
+
+    def _transact(
+        self,
+        op: str,
+        plan,
+        written: tuple[str, ...] | list[str] = (),
+        attempts: int = 5,
+        spec: list[str] | None = None,
+        stats_cols: list[str] | None = None,
+    ) -> int:
+        """The optimistic transaction every writer runs: read the latest
+        snapshot, ``plan(manifest_or_None) -> (kept, new, schema_ddl)``
+        against it, and publish ``kept + written + new`` as the next
+        version. ``written`` are files written before the loop; they do
+        not depend on the snapshot (a lost race only moved the log), so
+        every attempt reuses them. ``new`` files were derived from the
+        snapshot, so a losing attempt unlinks them and plans again
+        against the winner's. With ``stats_cols`` the commit carries
+        per-file min/max of ``new`` on those columns. ``attempts=1`` is
+        the no-blind-retry contract: CommitConflict reaches the caller.
+        Publishes through ``self._try_commit``, which tests and probes
+        replace on the instance or class."""
+        for _ in range(attempts):
+            latest = self.latest_version()
+            manifest = None if latest is None else self._manifest(latest)
+            kept, new, schema_ddl = plan(manifest)
+            stats = None if stats_cols is None else self._file_stats(new, stats_cols)
+            version = 0 if latest is None else latest + 1
+            try:
+                self._try_commit(
+                    version, op, [*kept, *written, *new], schema_ddl,
+                    spec=spec, stats=stats,
+                )
+                return version
+            except CommitConflict:
+                self._unlink_files(new)
+        raise CommitConflict(f"lost {attempts} {op} commit races on {self.root}")
+
+    def _unlink_files(self, rel_files: list[str]) -> None:
+        """Best-effort removal of data files a losing commit attempt
+        wrote (they are invisible — no manifest references them)."""
+        for rel in rel_files:
+            try:
+                os.unlink(os.path.join(self.root, rel))
+            except OSError:
+                pass
 
     # ------------------------------------------------------------ data --
     def _write_data(self, df: DataFrame) -> list[str]:
@@ -166,17 +344,34 @@ class AcidTable:
             if f.endswith(".parquet")
         ]
 
+    def _scan(self, files: list[str], schema_ddl: str) -> DataFrame:
+        """Read table files with the manifest's explicit schema (no
+        footer-merging inference over N files); no files read as an
+        empty frame of that schema."""
+        schema = T._parse_datatype_string(schema_ddl)
+        if not files:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(
+            *[os.path.join(self.root, f) for f in files]
+        )
+
+    def _by_abs(self, files: list[str]) -> dict[str, str]:
+        """Manifest entries keyed by absolute path — works for both
+        table-relative entries and the absolute external references a
+        shallow ``clone`` starts with."""
+        return {os.path.abspath(os.path.join(self.root, f)): f for f in files}
+
     def _file_stats(
         self, rel_files: list[str], stats_cols: list[str]
     ) -> dict:
         """Per-file min/max for ``stats_cols`` — the manifest-level
-        statistics every table format carries for FILE SKIPPING (the
-        extension point the module docstring promises). One grouped
-        aggregate over the new files (executor-side; only the stat
-        columns are read), keyed back to relative paths."""
-        paths = [os.path.join(self.root, f) for f in rel_files]
+        statistics every table format carries for FILE SKIPPING. One
+        grouped aggregate over the new files (executor-side; only the
+        stat columns are read), keyed back to manifest entries by
+        absolute path."""
+        by_abs = self._by_abs(rel_files)
         rows = (
-            self.spark.read.parquet(*paths)
+            self.spark.read.parquet(*by_abs)
             .select(F.input_file_name().alias("_f"), *stats_cols)
             .groupBy("_f")
             .agg(
@@ -185,22 +380,13 @@ class AcidTable:
             )
             .collect()
         )
-        by_rel: dict = {}
-        for r in rows:
-            fname = urllib.parse.unquote(r["_f"])
-            rel = next(
-                (f for f in rel_files if fname.endswith(f)), None
-            )
-            if rel is None:
-                continue
-            by_rel[rel] = {
-                c: [
-                    _stat_value(r[f"_min_{c}"]),
-                    _stat_value(r[f"_max_{c}"]),
-                ]
+        return {
+            by_abs[_local_path(r["_f"])]: {
+                c: [_stat_value(r[f"_min_{c}"]), _stat_value(r[f"_max_{c}"])]
                 for c in stats_cols
             }
-        return by_rel
+            for r in rows
+        }
 
     # ------------------------------------------------------------ read --
     def prune_files(
@@ -213,10 +399,7 @@ class AcidTable:
         point at 100 TB: a z-ordered table answers a band probe from
         the manifest in O(files) driver work, zero I/O. Returns
         (surviving files, total files)."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version in {self.root}")
-        manifest = self._manifest(latest if version is None else version)
+        _, manifest = self._snapshot(version)
         stats = manifest.get("stats", {})
         lo_c, hi_c = _stat_value(lo), _stat_value(hi)
         keep = []
@@ -245,36 +428,17 @@ class AcidTable:
         surviving file still filter). Identical results to a full-scan
         filter by construction — the skipped files provably contain no
         matching row."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version in {self.root}")
-        v = latest if version is None else version
+        v, manifest = self._snapshot(version)
         keep, _total = self.prune_files(col, lo, hi, v)
-        schema = T._parse_datatype_string(self._manifest(v)["schema"])
-        if not keep:
-            return self.spark.createDataFrame([], schema)
-        paths = [os.path.join(self.root, f) for f in keep]
-        return (
-            self.spark.read.schema(schema)
-            .parquet(*paths)
-            .filter((F.col(col) >= lo) & (F.col(col) <= hi))
+        return self._scan(keep, manifest["schema"]).filter(
+            (F.col(col) >= lo) & (F.col(col) <= hi)
         )
 
     def read(self, version: int | None = None) -> DataFrame:
         """Snapshot read (time travel via ``version``). Only files listed
         in that version's manifest are scanned."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version in {self.root}")
-        if version is None:
-            version = latest
-        manifest = self._manifest(version)
-        schema = T._parse_datatype_string(manifest["schema"])
-        if not manifest["files"]:
-            return self.spark.createDataFrame([], schema)
-        paths = [os.path.join(self.root, f) for f in manifest["files"]]
-        # Explicit schema: skips footer-merging inference over N files.
-        return self.spark.read.schema(schema).parquet(*paths)
+        _, manifest = self._snapshot(version)
+        return self._scan(manifest["files"], manifest["schema"])
 
     def changes(self, v_from: int, v_to: int) -> DataFrame:
         """Row-level change feed between two committed snapshots (the
@@ -300,16 +464,8 @@ class AcidTable:
         mf_from, mf_to = self._manifest(v_from), self._manifest(v_to)
         added = sorted(set(mf_to["files"]) - set(mf_from["files"]))
         removed = sorted(set(mf_from["files"]) - set(mf_to["files"]))
-        schema = T._parse_datatype_string(mf_to["schema"])
-
-        def _scan(files: list[str]) -> DataFrame:
-            if not files:
-                return self.spark.createDataFrame([], schema)
-            return self.spark.read.schema(schema).parquet(
-                *[os.path.join(self.root, f) for f in files]
-            )
-
-        added_df, removed_df = _scan(added), _scan(removed)
+        added_df = self._scan(added, mf_to["schema"])
+        removed_df = self._scan(removed, mf_to["schema"])
         inserts = added_df.exceptAll(removed_df).withColumn(
             "_change_type", F.lit("insert")
         )
@@ -321,7 +477,10 @@ class AcidTable:
     # ---------------------------------------------------------- writes --
     def overwrite(self, df: DataFrame) -> int:
         """CTAS / full replace as one atomic commit."""
-        return self._commit_loop("overwrite", df, lambda snap_files: [])
+        return self._transact(
+            "overwrite", lambda m: ([], [], _ddl(df)),
+            written=self._write_data(df), attempts=10,
+        )
 
     def append(
         self,
@@ -366,20 +525,22 @@ class AcidTable:
                     f"append rejected: expectations violated {violated} "
                     f"(sample failing row for {next(iter(violated))!r}: {bad})"
                 )
-        return self._commit_loop(
-            "append", df, lambda snap_files: snap_files, evolve=True
+        return self._transact(
+            "append",
+            lambda m: (_files(m), [], self._evolved_schema_ddl(df, m)),
+            written=self._write_data(df), attempts=10,
         )
 
-    def _evolved_schema_ddl(self, df: DataFrame, latest: int | None) -> str:
+    def _evolved_schema_ddl(self, df: DataFrame, manifest: dict | None) -> str:
         """ADD-COLUMN schema evolution: the committed schema is the
         current snapshot's fields followed by the batch's new fields.
         Earlier files simply lack the new columns — the explicit-schema
         snapshot read fills them with NULL, so no rewrite ever happens
         (the Delta/Iceberg mergeSchema contract). Changing an EXISTING
         column's type is refused loudly — evolution only widens."""
-        if latest is None:
-            return df.schema.simpleString()[7:-1]  # strip struct<...>
-        old = T._parse_datatype_string(self._manifest(latest)["schema"])
+        if manifest is None:
+            return _ddl(df)
+        old = T._parse_datatype_string(manifest["schema"])
         by_name = {f.name: f for f in old.fields}
         for f in df.schema.fields:
             have = by_name.get(f.name)
@@ -395,26 +556,6 @@ class AcidTable:
         )
         return merged.simpleString()[7:-1]
 
-    def _commit_loop(
-        self, op, df, keep_fn, max_retries: int = 10, evolve: bool = False
-    ) -> int:
-        files = self._write_data(df)
-        for _ in range(max_retries):
-            latest = self.latest_version()
-            base = [] if latest is None else self._manifest(latest)["files"]
-            version = 0 if latest is None else latest + 1
-            schema_ddl = (
-                self._evolved_schema_ddl(df, latest)
-                if evolve
-                else df.schema.simpleString()[7:-1]
-            )
-            try:
-                self._try_commit(version, op, keep_fn(base) + files, schema_ddl)
-                return version
-            except CommitConflict:
-                continue  # data files are reusable; only the log moved
-        raise CommitConflict(f"lost {max_retries} commit races on {self.root}")
-
     def append_with_recompute(self, build_df, max_retries: int = 10) -> int:
         """Atomic append whose BATCH is derived from the current
         snapshot (a per-name version counter, a dedup decision, ...):
@@ -429,39 +570,15 @@ class AcidTable:
         .save_model) and anything else that must read-then-append in
         one serializable step; keeps callers off the private
         _write_data/_manifest/_try_commit internals."""
-        for _ in range(max_retries):
-            latest = self.latest_version()
-            if latest is None:
-                snap, base, schema = None, [], None
-            else:
-                manifest = self._manifest(latest)
-                snap = self.read(latest)
-                base, schema = manifest["files"], manifest["schema"]
-            df = build_df(snap)
-            if schema is None:
-                schema = df.schema.simpleString()[7:-1]
-            files = self._write_data(df)
-            try:
-                self._try_commit(
-                    0 if latest is None else latest + 1,
-                    "append", base + files, schema,
-                )
-                return 0 if latest is None else latest + 1
-            except CommitConflict:
-                self._unlink_files(files)
-                continue  # rebuild against the winner's snapshot
-        raise CommitConflict(
-            f"lost {max_retries} commit races on {self.root}"
-        )
 
-    def _unlink_files(self, rel_files: list[str]) -> None:
-        """Best-effort removal of data files a losing commit attempt
-        wrote (they are invisible — no manifest references them)."""
-        for rel in rel_files:
-            try:
-                os.unlink(os.path.join(self.root, rel))
-            except OSError:
-                pass
+        def plan(m):
+            if m is None:
+                df = build_df(None)
+                return [], self._write_data(df), _ddl(df)
+            df = build_df(self._scan(m["files"], m["schema"]))
+            return m["files"], self._write_data(df), m["schema"]
+
+        return self._transact("append", plan, attempts=max_retries)
 
     def merge_insert_only(
         self, updates: DataFrame, keys: list[str], max_retries: int = 5
@@ -473,33 +590,17 @@ class AcidTable:
         old+new atomically. On a lost race the anti-join re-runs against
         the WINNER's snapshot — the recheck that makes concurrent
         insert-only merges serializable (no duplicate keys, ever)."""
-        for _ in range(max_retries):
-            latest = self.latest_version()
-            if latest is None:
-                try:
-                    return self._commit_loop("merge", updates, lambda b: b, 1)
-                except CommitConflict:
-                    continue
-            snapshot = self._manifest(latest)
-            existing_keys = self.read(latest).select(*keys)
+
+        def plan(m):
+            if m is None:
+                return [], self._write_data(updates), _ddl(updates)
             # Column-pruned existing side; anti-join broadcasts the small
             # side under AQE — same shape as the non-ACID upsert path.
+            existing_keys = self._scan(m["files"], m["schema"]).select(*keys)
             new_rows = updates.join(existing_keys, keys, "left_anti")
-            files = self._write_data(new_rows)
-            try:
-                self._try_commit(
-                    latest + 1,
-                    "merge",
-                    snapshot["files"] + files,
-                    snapshot["schema"],
-                )
-                return latest + 1
-            except CommitConflict:
-                # recompute against the new snapshot; drop the loser's
-                # files (the anti-join result is snapshot-dependent)
-                self._unlink_files(files)
-                continue
-        raise CommitConflict(f"lost {max_retries} merge races on {self.root}")
+            return m["files"], self._write_data(new_rows), m["schema"]
+
+        return self._transact("merge", plan, attempts=max_retries)
 
     def merge_upsert(
         self, updates: DataFrame, keys: list[str], max_retries: int = 5
@@ -600,15 +701,11 @@ class AcidTable:
                 "matched-row update image would be nondeterministic"
             )
         key_df = key_counts.drop("_n")
-        for _ in range(max_retries):
-            latest = self.latest_version()
-            if latest is None:
-                try:
-                    return self._commit_loop(_op, landing, lambda b: b, 1)
-                except CommitConflict:
-                    continue
-            manifest = self._manifest(latest)
-            schema = T._parse_datatype_string(manifest["schema"])
+
+        def plan(m):
+            if m is None:
+                return [], self._write_data(landing), _ddl(landing)
+            schema = T._parse_datatype_string(m["schema"])
             table_fields = {f.name: f.dataType for f in schema.fields}
             batch_fields = {
                 f.name: f.dataType for f in schema_src.schema.fields
@@ -628,53 +725,35 @@ class AcidTable:
                     "evolution; use append for schema-widening loads"
                 )
             affected: set[str] = set()
-            if manifest["files"]:
-                paths = [os.path.join(self.root, f) for f in manifest["files"]]
+            if m["files"]:
                 hit = (
-                    self.spark.read.schema(schema)
-                    .parquet(*paths)
+                    self._scan(m["files"], m["schema"])
                     .select(*keys, F.input_file_name().alias("f"))
                     .join(key_df, keys, "left_semi")
                     .select("f")
                     .distinct()
                     .collect()
                 )
-                affected = self._resolve_hits(manifest, hit)
-            kept = [f for f in manifest["files"] if f not in affected]
-            new_files: list[str] = []
-            if affected:
-                apaths = [os.path.join(self.root, f) for f in sorted(affected)]
-                survivors = (
-                    self.spark.read.schema(schema)
-                    .parquet(*apaths)
-                    .join(key_df, keys, "left_anti")
-                )
-                # The survivor rewrite and the landing write are
-                # INDEPENDENT jobs into separate immutable dirs —
-                # submit both so the second back-fills the first's
-                # straggler tail (guide §2.6); the commit below still
-                # waits for both, so atomicity is unchanged and a
-                # failure of either aborts before any manifest lands.
-                from concurrent.futures import ThreadPoolExecutor
+                affected = self._resolve_hits(m, hit)
+            kept = [f for f in m["files"] if f not in affected]
+            if not affected:
+                return kept, self._write_data(landing), m["schema"]
+            survivors = self._scan(sorted(affected), m["schema"]).join(
+                key_df, keys, "left_anti"
+            )
+            # The survivor rewrite and the landing write are INDEPENDENT
+            # jobs into separate immutable dirs — submit both so the
+            # second back-fills the first's straggler tail (guide §2.6);
+            # the commit still waits for both, so atomicity is unchanged
+            # and a failure of either aborts before any manifest lands.
+            from concurrent.futures import ThreadPoolExecutor
 
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    fut_s = pool.submit(self._write_data, survivors)
-                    fut_l = pool.submit(self._write_data, landing)
-                    new_files += fut_s.result()
-                    new_files += fut_l.result()
-            else:
-                new_files += self._write_data(landing)
-            try:
-                self._try_commit(
-                    latest + 1,
-                    _op,
-                    kept + new_files,
-                    manifest["schema"],
-                )
-                return latest + 1
-            except CommitConflict:
-                continue  # recompute the affected set against the winner
-        raise CommitConflict(f"lost {max_retries} {_op} races on {self.root}")
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                fut_s = pool.submit(self._write_data, survivors)
+                fut_l = pool.submit(self._write_data, landing)
+                return kept, fut_s.result() + fut_l.result(), m["schema"]
+
+        return self._transact(_op, plan, attempts=max_retries)
 
     # ----------------------------------------------- copy-on-write DML --
     def _probe(self, manifest: dict, condition: Column) -> DataFrame:
@@ -682,11 +761,8 @@ class AcidTable:
         projection pruned to the predicate columns + file name (verified
         by tests/test_acid.py — at 100 TB this reads one column with
         row-group skipping, not the table)."""
-        schema = T._parse_datatype_string(manifest["schema"])
-        paths = [os.path.join(self.root, f) for f in manifest["files"]]
         return (
-            self.spark.read.schema(schema)
-            .parquet(*paths)
+            self._scan(manifest["files"], manifest["schema"])
             .filter(condition)
             .select(F.input_file_name().alias("f"))
             .distinct()
@@ -694,19 +770,13 @@ class AcidTable:
 
     def _resolve_hits(self, manifest: dict, hit_rows) -> set[str]:
         """Map ``input_file_name`` hits back to MANIFEST ENTRIES by
-        absolute path — works for both table-relative entries and the
-        absolute external references a shallow ``clone`` starts with.
-        Every hit must resolve to a listed entry, or the rewrite set is
-        wrong — fail loudly rather than drop files silently."""
-        by_abs = {
-            os.path.abspath(os.path.join(self.root, f)): f
-            for f in manifest["files"]
-        }
+        absolute path. Every hit must resolve to a listed entry, or the
+        rewrite set is wrong — fail loudly rather than drop files
+        silently."""
+        by_abs = self._by_abs(manifest["files"])
         entries = set()
         for row in hit_rows:
-            p = os.path.abspath(
-                urllib.parse.unquote(urllib.parse.urlparse(row.f).path)
-            )
+            p = _local_path(row.f)
             entry = by_abs.get(p)
             assert entry is not None, (p, sorted(by_abs)[:3])
             entries.add(entry)
@@ -723,31 +793,30 @@ class AcidTable:
         )
 
     def _rewrite(
-        self, op: str, condition: Column, transform, max_retries: int = 5
+        self,
+        op: str,
+        condition: Column,
+        transform,
+        landing: DataFrame | None = None,
+        max_retries: int = 5,
     ) -> int:
-        """Shared copy-on-write loop for DELETE/UPDATE: rewrite ONLY the
-        files containing matches, keep every other file by reference."""
-        for _ in range(max_retries):
-            latest = self.latest_version()
-            if latest is None:
-                raise FileNotFoundError(f"no committed version in {self.root}")
-            manifest = self._manifest(latest)
-            affected = self._affected_files(manifest, condition)
-            kept = [f for f in manifest["files"] if f not in affected]
-            new_files: list[str] = []
-            if affected:
-                schema = T._parse_datatype_string(manifest["schema"])
-                paths = [os.path.join(self.root, f) for f in sorted(affected)]
-                rewritten = transform(self.spark.read.schema(schema).parquet(*paths))
-                new_files = self._write_data(rewritten)
-            try:
-                self._try_commit(
-                    latest + 1, op, kept + new_files, manifest["schema"]
-                )
-                return latest + 1
-            except CommitConflict:
-                continue  # recompute the affected set against the winner
-        raise CommitConflict(f"lost {max_retries} {op} races on {self.root}")
+        """Shared copy-on-write transaction for DELETE/UPDATE and the
+        partition overwrite: rewrite ONLY the files containing matches
+        (through ``transform``), keep every other file by reference, and
+        land ``landing`` (written once, before the first attempt) in the
+        same commit."""
+        self._snapshot()  # the table must exist before anything is written
+        written = [] if landing is None else self._write_data(landing)
+
+        def plan(m):
+            affected = self._affected_files(m, condition)
+            kept = [f for f in m["files"] if f not in affected]
+            if not affected:
+                return kept, [], m["schema"]
+            rewritten = transform(self._scan(sorted(affected), m["schema"]))
+            return kept, self._write_data(rewritten), m["schema"]
+
+        return self._transact(op, plan, written=written, attempts=max_retries)
 
     def overwrite_partitions(self, df: DataFrame, partition_cols: list[str]) -> int:
         """Transactional dynamic partition overwrite (Iceberg
@@ -792,31 +861,9 @@ class AcidTable:
                     eq = F.col(c) == F.lit(v)
                     clause = eq if clause is None else (clause & eq)
                 cond = clause if cond is None else (cond | clause)
-        new_files = self._write_data(df)
-        for _ in range(5):
-            latest = self.latest_version()
-            if latest is None:
-                raise FileNotFoundError(f"no committed version in {self.root}")
-            manifest = self._manifest(latest)
-            affected = self._affected_files(manifest, cond)
-            kept = [f for f in manifest["files"] if f not in affected]
-            rewritten: list[str] = []
-            if affected:
-                schema = T._parse_datatype_string(manifest["schema"])
-                paths = [os.path.join(self.root, f) for f in sorted(affected)]
-                survivors = self.spark.read.schema(schema).parquet(*paths).filter(~cond)
-                rewritten = self._write_data(survivors)
-            try:
-                self._try_commit(
-                    latest + 1,
-                    "overwrite_partitions",
-                    kept + rewritten + new_files,
-                    manifest["schema"],
-                )
-                return latest + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"lost 5 overwrite_partitions races on {self.root}")
+        return self._rewrite(
+            "overwrite_partitions", cond, lambda d: d.filter(~cond), landing=df
+        )
 
     def delete_where(self, condition: Column) -> int:
         """Transactional DELETE (docx UPDATE/DELETE parity): copy-on-write
@@ -860,26 +907,12 @@ class AcidTable:
         Iceberg evolution contract. ``history()`` shows the spec per
         commit for audit."""
         clustered = df.repartition(*[F.col(c) for c in partition_cols])
-        # Written once: a lost race only moved the log, so every retry
-        # commits these same files (as _commit_loop does).
-        new_files = self._write_data(clustered)
-        for _ in range(max_retries):
-            latest = self.latest_version()
-            base = -1 if latest is None else latest
-            files: list[str] = (
-                [] if latest is None else list(self._manifest(latest)["files"])
-            )
-            schema_ddl = self._evolved_schema_ddl(clustered, latest)
-            try:
-                self._try_commit(
-                    base + 1, "append", files + new_files, schema_ddl,
-                    spec=list(partition_cols),
-                )
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"lost {max_retries} append_partitioned races on {self.root}"
+        return self._transact(
+            "append",
+            lambda m: (_files(m), [], self._evolved_schema_ddl(clustered, m)),
+            written=self._write_data(clustered),
+            attempts=max_retries,
+            spec=list(partition_cols),
         )
 
     # ------------------------------------------------------- maintenance --
@@ -890,16 +923,16 @@ class AcidTable:
         no shuffle); prior versions still reference the old files until
         ``vacuum()`` after they expire. The small-files problem is the
         classic failure mode of frequent small MERGEs at scale."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version in {self.root}")
-        manifest = self._manifest(latest)
-        files = self._write_data(self.read(latest).coalesce(target_files))
+        self._snapshot()  # the table must exist
+
+        def plan(m):
+            df = self._scan(m["files"], m["schema"]).coalesce(target_files)
+            return [], self._write_data(df), m["schema"]
+
         # No blind retry here: compacting a STALE snapshot would drop a
         # concurrent writer's rows. On conflict the caller re-invokes
         # against the new latest (CommitConflict propagates).
-        self._try_commit(latest + 1, "compact", files, manifest["schema"])
-        return latest + 1
+        return self._transact("compact", plan, attempts=1)
 
     def optimize_zorder(
         self, cols: list[str], target_files: int = 8, bits: int = 8
@@ -913,7 +946,8 @@ class AcidTable:
 
         Distributed end to end: each column maps to a ``bits``-bit rank
         via its approx-quantile boundaries (one agg pass; the 2^bits-1
-        boundary array broadcasts and ranks via a JVM array fold), the
+        boundary array broadcasts, and one vectorized Arrow pass ranks
+        each row against it with ``np.searchsorted``), the
         per-column ranks bit-INTERLEAVE into the Morton z-key, and one
         ``repartitionByRange`` on the z-key (sorted within partitions)
         writes ``target_files`` files each owning a contiguous z-range.
@@ -921,106 +955,19 @@ class AcidTable:
         commit is empty, like ``compact``. Columns must be orderable by
         percentile (numeric/timestamp). Same no-blind-retry contract as
         ``compact``: on a commit race, CommitConflict propagates."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version in {self.root}")
-        manifest = self._manifest(latest)
-        df = self.read(latest)
-        out_cols = list(df.columns)
-        fractions = [i / (1 << bits) for i in range(1, 1 << bits)]
-        # ONE aggregate computes every column's boundary array (round 14,
-        # optimization round — previously one agg job per column), and the
-        # per-row ranks run vectorized in a single Arrow pass:
-        # np.searchsorted(bounds, value, side="left") counts boundaries
-        # strictly below the value — integer-identical to the replaced
-        # interpreted aggregate fold acc + (value > b) over the sorted
-        # boundary array (Spark's NaN-greatest double ordering included:
-        # NaN ranks past every boundary on both paths). The fold ran
-        # INTERPRETED over (2^bits - 1) elements per column per row, and
-        # repartitionByRange evaluates its input twice (range sampling +
-        # the write), which measured ~6 s of snk10's zorder at sf0.1.
-        # Z-order columns are expected non-null (they must be orderable
-        # by percentile); NULLs in float columns are indistinguishable
-        # from NaN post-Arrow and would rank high where the old fold
-        # ranked them 0.
-        # Timestamp columns rank through unix_micros — a strictly
-        # monotone bijection, so the quantile sketch selects the same
-        # boundary elements and every per-row rank is unchanged — and
-        # only PRIMITIVE types cross the Arrow boundary.
-        def _zval(c: str) -> Column:
-            if isinstance(df.schema[c].dataType, T.TimestampType):
-                return F.unix_micros(F.col(c))
-            return F.col(c)
+        self._snapshot()  # the table must exist
 
-        for ci, c in enumerate(cols):
-            df = df.withColumn(f"_v{ci}", _zval(c))
-        bnd = df.agg(
-            *[
-                F.percentile_approx(f"_v{ci}", fractions, 10_000).alias(
-                    f"_b{ci}"
-                )
-                for ci in range(len(cols))
-            ]
-        )
-        df = df.crossJoin(F.broadcast(bnd))
-        base_fields = [
-            f
-            for f in df.schema.fields
-            if not (f.name.startswith("_b") or f.name.startswith("_v"))
-        ]
-        rank_schema = T.StructType(
-            base_fields
-            + [T.StructField(f"_r{ci}", T.IntegerType()) for ci in range(len(cols))]
-        )
-        keep = [f.name for f in rank_schema.fields]
-        n_zcols = len(cols)
+        def plan(m):
+            df = _zordered(
+                self._scan(m["files"], m["schema"]), cols, target_files, bits
+            )
+            return [], self._write_data(df), m["schema"]
 
-        def _ranks(batches):
-            import numpy as np
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ranks = {}
-                for ci in range(n_zcols):
-                    v = pdf[f"_v{ci}"].to_numpy()
-                    ba = np.asarray(pdf[f"_b{ci}"].iloc[0], dtype=v.dtype)
-                    ranks[f"_r{ci}"] = np.searchsorted(
-                        ba, v, side="left"
-                    ).astype("int32")
-                yield pdf[[c for c in keep if c in pdf.columns]].assign(**ranks)
-
-        df = df.mapInPandas(_ranks, rank_schema)
-        z = F.lit(0).cast("long")
-        for i in range(bits):
-            for ci in range(len(cols)):
-                bit = F.shiftright(F.col(f"_r{ci}"), i).bitwiseAND(F.lit(1))
-                z = z.bitwiseOR(
-                    F.shiftleft(bit.cast("long"), i * len(cols) + ci)
-                )
-        # Lazily checkpoint the z-keyed frame: repartitionByRange
-        # executes its input TWICE (range-boundary sampling + the real
-        # pass), and without the lineage cut that meant two full table
-        # scans and two Arrow rank passes per rewrite. The materialized
-        # frame is the same rows the rewrite is about to shuffle anyway.
-        ordered = (
-            df.withColumn("_z", z)
-            .localCheckpoint(eager=False)
-            .repartitionByRange(target_files, "_z")
-            .sortWithinPartitions("_z")
-            .select(*out_cols)
-        )
-        files = self._write_data(ordered)
         # ZORDER's payoff is file skipping, so the rewrite commits WITH
         # per-file min/max stats on the z-ordered columns — band probes
         # then prune from the manifest alone (prune_files/read_range),
-        # zero data I/O, closing the file-skipping extension point the
-        # module docstring promises.
-        stats = self._file_stats(files, cols)
-        self._try_commit(
-            latest + 1, "zorder", files, manifest["schema"], stats=stats
-        )
-        return latest + 1
+        # zero data I/O.
+        return self._transact("zorder", plan, attempts=1, stats_cols=cols)
 
     def clone(self, target_root: str) -> "AcidTable":
         """SHALLOW CLONE (Delta's ``CLONE``): a new INDEPENDENT table
@@ -1040,15 +987,11 @@ class AcidTable:
         The source must not vacuum away files the clone still
         references — the same retention contract Delta documents for
         shallow clones."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version in {self.root}")
-        manifest = self._manifest(latest)
+        _, manifest = self._snapshot()
         target = AcidTable(self.spark, target_root)
-        abs_files = [
-            os.path.abspath(os.path.join(self.root, f))
-            for f in manifest["files"]
-        ]
+        # Version 0 of a new table: nothing to plan against, so no
+        # transaction loop; a populated target raises CommitConflict.
+        abs_files = list(self._by_abs(manifest["files"]))
         target._try_commit(0, "clone", abs_files, manifest["schema"])
         return target
 
@@ -1065,14 +1008,11 @@ class AcidTable:
         Same no-blind-retry contract as ``compact``: restoring over a
         concurrent writer's unseen commit would silently drop it, so on
         a version race CommitConflict propagates to the caller."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version in {self.root}")
-        manifest = self._manifest(version)
-        self._try_commit(
-            latest + 1, "restore", manifest["files"], manifest["schema"]
+        _, target = self._snapshot(version)
+        return self._transact(
+            "restore", lambda m: (target["files"], [], target["schema"]),
+            attempts=1,
         )
-        return latest + 1
 
     def vacuum(self, retain_last: int | None = None) -> list[str]:
         """Delete data files referenced by NO commit (crash debris, lost

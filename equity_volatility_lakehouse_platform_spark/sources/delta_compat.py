@@ -42,10 +42,10 @@ explicit schema (no footer-merging inference, same discipline as
 optional parquet-footer ``numRecords`` stat (cheap footer read,
 skippable with ``stats=False`` for million-file imports).
 
-Commit atomicity uses the same POSIX ``link(2)`` put-if-absent as
-``AcidTable._try_commit`` — the Delta spec's required "mutual
-exclusion on version creation", which is exactly what delta-rs uses
-on local/HDFS stores.
+Commits publish through ``acid.put_if_absent``, the one put-if-absent
+step ``AcidTable._try_commit`` uses too (temp file, fsync, POSIX
+``link(2)``) — the Delta spec's required "mutual exclusion on version
+creation", which is exactly what delta-rs uses on local/HDFS stores.
 """
 
 from __future__ import annotations
@@ -60,6 +60,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from equity_volatility_lakehouse_platform_spark.sources.acid import put_if_absent
 
 _LOG = "_delta_log"
 _PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -117,22 +119,12 @@ class DeltaCompatTable:
         return max(versions) if versions else None
 
     def _commit(self, version: int, actions: list[dict]) -> None:
-        """Atomically publish one log entry (put-if-absent via link(2))."""
+        """Atomically publish one log entry (put-if-absent)."""
         final = os.path.join(self._log_dir(), _log_name(version))
-        tmp = final + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            for action in actions:
-                fh.write(json.dumps(action) + "\n")
-            fh.flush()
-            os.fsync(fh.fileno())
-        try:
-            os.link(tmp, final)
-        except FileExistsError as ex:
+        if not put_if_absent(final, "".join(json.dumps(a) + "\n" for a in actions)):
             raise DeltaFormatError(
                 f"delta version {version} already committed in {self.root}"
-            ) from ex
-        finally:
-            os.unlink(tmp)
+            )
 
     def _meta_action(
         self, schema: T.StructType, partition_columns: list[str]
@@ -300,9 +292,7 @@ class DeltaCompatTable:
             raise DeltaFormatError(
                 f"export target {self.root} is not empty"
             )
-        src_latest = acid.latest_version()
-        if src_latest is None:
-            raise FileNotFoundError(f"no committed version in {acid.root}")
+        src_latest, _ = acid._snapshot()
         prev_files: set[str] = set()
         prev_schema: str | None = None
         for version in range(src_latest + 1):

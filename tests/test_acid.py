@@ -845,13 +845,34 @@ def test_partition_evolution_appends_never_rewrite(spark, orders, root):
     assert t.read().filter(F.col("o_orderstatus").isNull()).count() == 0
 
 
-def test_append_partitioned_lost_race_reuses_written_files(spark, orders, root):
+@pytest.mark.parametrize(
+    "op",
+    [
+        "append",
+        "append_partitioned",
+        "merge_insert_only",
+        "merge_upsert",
+        "delete_where",
+        "overwrite_partitions",
+    ],
+)
+def test_append_partitioned_lost_race_reuses_written_files(
+    spark, orders, root, op
+):
     # A lost commit race only moves the log: the retry must commit the
     # batch files already written, not write the batch again (which
-    # left the loser's copy under data/ as orphans until vacuum).
+    # left the loser's copy under data/ as orphans until vacuum). Files
+    # the losing attempt derived from its snapshot (a merge's anti-join,
+    # a copy-on-write rewrite) are unlinked with it. Either way no
+    # orphan parquet stays under data/.
     t = AcidTable(spark, root)
-    commit = t._try_commit
+    key = F.col("o_orderkey")
+    evens = orders.filter(key % 2 == 0)
+    if op != "append_partitioned":
+        t.overwrite(evens)
+    commit, write = t._try_commit, t._write_data
     calls = {"n": 0}
+    writes_made = []
 
     def lose_first(*args, **kwargs):
         calls["n"] += 1
@@ -859,16 +880,52 @@ def test_append_partitioned_lost_race_reuses_written_files(spark, orders, root):
             raise CommitConflict("rival won")
         return commit(*args, **kwargs)
 
+    def count_writes(df):
+        writes_made.append(df)
+        return write(df)
+
     t._try_commit = lose_first
-    batch = orders.filter(F.col("o_orderkey") % 3 == 0)
-    assert t.append_partitioned(batch, ["o_orderstatus"]) == 0
+    t._write_data = count_writes
+    batch = orders.filter(key % 3 == 0)
+    is_f = F.col("o_orderstatus") == "F"
+    if op == "append_partitioned":
+        assert t.append_partitioned(batch, ["o_orderstatus"]) == 0
+        want = batch
+    elif op == "append":
+        t.append(batch)
+        want = evens.unionAll(batch)
+    elif op in ("merge_insert_only", "merge_upsert"):
+        getattr(t, op)(batch, ["o_orderkey"])
+        want = orders.filter((key % 2 == 0) | (key % 3 == 0))
+    elif op == "delete_where":
+        t.delete_where(key % 3 == 0)
+        want = evens.filter(key % 3 != 0)
+    else:
+        t.overwrite_partitions(batch.filter(is_f), ["o_orderstatus"])
+        want = evens.filter(~is_f).unionAll(batch.filter(is_f))
     assert calls["n"] == 2
-    writes = [
-        w for w in os.listdir(os.path.join(root, "data")) if w.startswith("w-")
-    ]
-    assert len(writes) == 1, writes
-    assert t.read().exceptAll(batch).count() == 0
-    assert batch.exceptAll(t.read()).count() == 0
+    if op == "append_partitioned":
+        writes = [
+            w for w in os.listdir(os.path.join(root, "data")) if w.startswith("w-")
+        ]
+        assert len(writes) == 1, writes
+    if op in ("append", "append_partitioned", "overwrite_partitions"):
+        # the batch is written once; overwrite_partitions also rewrites
+        # the surviving rows of the replaced partitions once per attempt
+        assert len(writes_made) == (3 if op == "overwrite_partitions" else 1)
+    live: set[str] = set()
+    for manifest in t.history():
+        live.update(manifest["files"])
+    data_root = os.path.join(root, "data")
+    on_disk = {
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _dirs, fs in os.walk(data_root)
+        for f in fs
+        if f.endswith(".parquet")
+    }
+    assert on_disk <= live, f"orphan files: {sorted(on_disk - live)}"
+    assert t.read().exceptAll(want).count() == 0
+    assert want.exceptAll(t.read()).count() == 0
 
 
 def test_manifest_stats_prune_band_probe(spark, sf_dir, root):
